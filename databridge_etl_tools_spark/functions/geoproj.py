@@ -6,10 +6,23 @@ loops (ago/ago.py:351-358, opendata/opendata.py:277-298) and a
 multi-step 2272→4269→4326→3857 pipeline with a centimeter affine
 nudge (db2/db2.py:731-819). pyproj is not in this container — and
 does not need to be: the two projections in play are closed-form
-(public Snyder/EPSG formulas), so we evaluate them **inside
-whole-stage codegen** with pyspark.sql math functions. No Python in
-the hot path, no per-partition transformer objects, and the math
-vectorizes across a 1000-executor cluster like any other expression.
+(public Snyder/EPSG formulas), so we evaluate them as plain
+pyspark.sql math expressions. No Python in the hot path, no
+per-partition transformer objects, and the math vectorizes across a
+1000-executor cluster like any other expression.
+
+Expression size: Spark builds an expression TREE, not a DAG. A
+subexpression referenced twice is copied twice into the plan and into
+the generated Java, so an unrolled iteration whose step reads its
+input k times grows as k^iterations. The ellipsoidal latitude step
+written as ``pow((1−e·sinφ)/(1+e·sinφ), e/2)`` reads φ twice, so six
+unrolled steps would copy the first φ 2^6 = 64 times; inside the
+per-SRID CASE of ``publish_opendata`` that overflows the JVM's 64 KB
+method limit, and whole-stage codegen falls back to interpreted
+evaluation after seconds of failed compiling on the driver. Every
+unrolled step therefore reads φ exactly once, via the exact identity
+((1−z)/(1+z))^(e/2) = exp(−e·atanh(z)), and the tree grows linearly
+with the iteration count.
 
 Supported CRS:
 - EPSG:4326  (NAD83/WGS84 lon-lat degrees; the reference treats the
@@ -95,13 +108,13 @@ def pa_south_ft_to_lonlat(easting_ft: Column, northing_ft: Column) -> tuple[Colu
     t_ = F.pow(rho / F.lit(_A * _BIGF), 1.0 / _N)
     theta = F.atan2(F.lit(sign) * x, F.lit(sign) * y)
     lam = theta / _N + F.lit(_LON0)
-    # φ = π/2 − 2·atan(t·((1−e·sinφ)/(1+e·sinφ))^(e/2)), fixed-point
+    # φ = π/2 − 2·atan(t·((1−e·sinφ)/(1+e·sinφ))^(e/2)), fixed-point,
+    # with ((1−z)/(1+z))^(e/2) = exp(−e·atanh(z)) so each step reads
+    # φ once (see the module docstring)
     phi = F.lit(math.pi / 2) - 2 * F.atan(t_)
     for _ in range(6):
-        esin = F.lit(_E) * F.sin(phi)
-        phi = F.lit(math.pi / 2) - 2 * F.atan(
-            t_ * F.pow((1 - esin) / (1 + esin), _E / 2)
-        )
+        w = F.exp(F.lit(-_E) * F.atanh(F.lit(_E) * F.sin(phi)))
+        phi = F.lit(math.pi / 2) - 2 * F.atan(t_ * w)
     return F.degrees(lam), F.degrees(phi)
 
 

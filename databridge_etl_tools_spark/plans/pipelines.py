@@ -257,7 +257,10 @@ def publish_opendata(
     lat/lng columns, drop the geometry, write CSV + gzip artifact.
 
     Reprojection is per-row CASE over the (repaired) SRID — all
-    column expressions, so mixed-SRID tables publish in one pass.
+    column expressions, so mixed-SRID tables publish in one pass. The
+    point and SRID are parsed once into internal columns that the
+    CASE branches reference, so the regex parse is not copied into
+    every branch of the generated code.
     Covered CRS: 4326 and 4269 (NAD83 lon-lat ≈ WGS84 at the cm level
     absorbed by the reference's nudge), 2272, 3857; bare WKT assumes
     ``default_srid``. Rows whose SRID is outside that set publish
@@ -273,7 +276,9 @@ def publish_opendata(
         srid = G.remap_bad_srid(G.srid_of(geom_col))
         if default_srid is not None:
             srid = F.coalesce(srid, F.lit(default_srid))
-        x, y = G.point_to_lon_lat(F.col(geom_col))
+        px, py = G.point_to_lon_lat(F.col(geom_col))
+        df = df.withColumns({"_pub_x": px, "_pub_y": py, "_pub_srid": srid})
+        x, y, srid = F.col("_pub_x"), F.col("_pub_y"), F.col("_pub_srid")
         lcc_lon, lcc_lat = GP.pa_south_ft_to_lonlat(x, y)
         merc_lon, merc_lat = GP.webmercator_to_lonlat(x, y)
         lonlat_passthrough = srid.isin(4326, 4269)
@@ -287,7 +292,9 @@ def publish_opendata(
             .when(srid == 2272, lcc_lat)
             .when(srid == 3857, merc_lat)
         )
-        df = df.withColumns({"lng": lng, "lat": lat}).drop(geom_col)
+        df = df.withColumns({"lng": lng, "lat": lat}).drop(
+            geom_col, "_pub_x", "_pub_y", "_pub_srid"
+        )
     if exclude_fields:
         df = df.drop(*exclude_fields)
     write_csv(df, out_dir)

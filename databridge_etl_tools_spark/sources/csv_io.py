@@ -2,10 +2,13 @@
 §2.2 K2/K6): header row, utf-8→latin-1 fallback, unbounded cell size
 (huge WKT cells), gzip artifact copies.
 
-Scale note: ``spark.read.csv`` splits uncompressed files by byte
-range, so a single 1 TB staged CSV still fans out across executors;
-the encoding probe is bounded (first 500 rows) like every probe in
-the reference.
+Scale note: reads set ``multiLine=true`` because staged cells may
+hold embedded newlines (quoted free text, long WKT). With it Spark
+cannot split a file by byte range (a split could start inside a
+quoted cell), so each staged file is read whole by a single task:
+parallelism comes from the number of files, not their size, and a
+single 1 TB staged CSV is one task. Stage large tables as many part
+files.
 """
 
 from __future__ import annotations

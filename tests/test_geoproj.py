@@ -74,6 +74,58 @@ def test_reproject_point_wkt_tags_srid(spark):
     assert out.g.startswith("SRID=3857;POINT (")
 
 
+def _py_lcc_inverse(e_ft, n_ft):
+    """Scalar EPSG:2272 inverse in the textbook form, latitude step
+    φ ← π/2 − 2·atan(t·((1−e·sinφ)/(1+e·sinφ))^(e/2))."""
+    x = e_ft * GP.FT_US - GP._FE_M
+    y = GP._RHO0 - (n_ft * GP.FT_US - GP._FN_M)
+    t = (math.hypot(x, y) / (GP._A * GP._BIGF)) ** (1.0 / GP._N)
+    lam = math.atan2(x, y) / GP._N + GP._LON0
+    phi = math.pi / 2 - 2 * math.atan(t)
+    for _ in range(6):
+        esin = GP._E * math.sin(phi)
+        phi = math.pi / 2 - 2 * math.atan(t * ((1 - esin) / (1 + esin)) ** (GP._E / 2))
+    return math.degrees(lam), math.degrees(phi)
+
+
+def test_pa_south_inverse_matches_scalar_pow_form_compiled(spark, tmp_path):
+    """The exp·atanh latitude step equals the textbook pow form to
+    1e-10° across the EPSG:2272 domain (about 80.6°W-74.7°W,
+    39.7°N-41.2°N), evaluated through generated code: the input is a
+    parquet scan (a local relation would be folded on the driver) and
+    the interpreted fallback is off, so an oversized expression fails
+    here instead of running interpreted."""
+    grid = [
+        (1_150_000.0 + i * 170_000.0, 40_000.0 + j * 60_000.0)
+        for i in range(11)
+        for j in range(11)
+    ]
+    src = str(tmp_path / "grid")
+    spark.createDataFrame(grid, "e_ft double, n_ft double").write.parquet(src)
+    df = spark.read.parquet(src)
+    lon, lat = GP.pa_south_ft_to_lonlat(F.col("e_ft"), F.col("n_ft"))
+    g = F.format_string("SRID=2272;POINT (%s %s)", F.col("e_ft"), F.col("n_ft"))
+    merc = GP.reproject_point_wkt(g, 2272, 3857)
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        rows = df.select("e_ft", "n_ft", lon.alias("lon"), lat.alias("lat"), merc.alias("m")).collect()
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
+    assert len(rows) == len(grid)
+    lons, lats = [r.lon for r in rows], [r.lat for r in rows]
+    assert min(lons) < -80.0 and max(lons) > -75.0
+    assert min(lats) < 39.8 and max(lats) > 41.0
+    for r in rows:
+        want_lon, want_lat = _py_lcc_inverse(r.e_ft, r.n_ft)
+        assert abs(r.lon - want_lon) < 1e-10 and abs(r.lat - want_lat) < 1e-10, r
+        mx = 6378137.0 * math.radians(want_lon) - 0.20
+        my = 6378137.0 * math.log(math.tan(math.pi / 4 + math.radians(want_lat) / 2)) + 1.18
+        assert r.m.startswith("SRID=3857;POINT (")
+        got_x, got_y = map(float, r.m[len("SRID=3857;POINT ("):-1].split())
+        assert abs(got_x - mx) < 1e-5 and abs(got_y - my) < 1e-5, r
+
+
 # ---------------- F15 WKB codec ----------------
 
 

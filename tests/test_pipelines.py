@@ -5,9 +5,12 @@ Z-coords), extract it, load it back, assert recorddiff is empty."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
+from databridge_etl_tools_spark.functions import geoproj as GP
 from databridge_etl_tools_spark.plans import pipelines as P
 from databridge_etl_tools_spark.qa import QAError, QAReport
 from databridge_etl_tools_spark.schema import TableSchema
@@ -177,6 +180,97 @@ def test_publish_opendata_reprojects_and_gzips(spark, tmp_path, staged_csv):
     # empty geometry row → null lat/lng
     assert rows["1"].lng is None
     assert glob.glob(out + "_gz/*.csv.gz")
+
+
+MIXED_SCHEMA = TableSchema.from_json(
+    {
+        "primaryKey": ["objectid"],
+        "fields": [
+            {"name": "objectid", "type": "integer", "constraints": {"required": True}},
+            {"name": "textfield", "type": "string"},
+            {"name": "shape", "type": "geometry", "geometry_type": "point"},
+        ],
+    }
+)
+
+
+def test_publish_mixed_srids_compiles_without_fallback(spark, tmp_path):
+    """The reprojection CASE must fit whole-stage codegen: with the
+    interpreted fallback switched off, a too-large generated method
+    ("Code grows beyond 64 KB") fails the publish instead of silently
+    running slow. The table is file-backed on purpose: a local
+    (createDataFrame) relation is folded on the driver and never
+    reaches codegen."""
+    lonlat = {1: (-75.1635, 39.9528), 2: (-75.05, 40.05), 5: (-75.2, 39.9)}
+    pa = spark.createDataFrame(
+        [(k, lon, lat) for k, (lon, lat) in lonlat.items()], "k int, lon double, lat double"
+    )
+    e_ft, n_ft = GP.lonlat_to_pa_south_ft(F.col("lon"), F.col("lat"))
+    ft = {r.k: (r.e, r.n) for r in pa.select("k", e_ft.alias("e"), n_ft.alias("n")).collect()}
+    mx = 6378137.0 * math.radians(-75.1)
+    my = 6378137.0 * math.log(math.tan(math.pi / 4 + math.radians(39.95) / 2))
+    base = tmp_path / "mixed.csv"
+    base.write_text(
+        "objectid,textfield,shape\n"
+        f"1,lcc,SRID=2272;POINT({ft[1][0]!r} {ft[1][1]!r})\n"
+        f"2,lcc,SRID=2272;POINT({ft[2][0]!r} {ft[2][1]!r})\n"
+        f"3,merc,SRID=3857;POINT({mx!r} {my!r})\n"
+        "4,lonlat,SRID=4326;POINT(-75.25 40.01)\n"
+        "6,unsupported,SRID=2263;POINT(988000 200000)\n"
+    )
+    delta = tmp_path / "delta.csv"
+    delta.write_text(
+        "objectid,textfield,shape\n"
+        "2,updated,SRID=4326;POINT(-75.0 40.1)\n"
+        f"5,new,SRID=2272;POINT({ft[5][0]!r} {ft[5][1]!r})\n"
+    )
+    store = TableStore(spark, str(tmp_path / "wh"))
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        P.load_pipeline(spark, str(base), MIXED_SCHEMA, store, "mixed", mode="truncate")
+        assert P.upsert_pipeline(spark, str(delta), MIXED_SCHEMA, store, "mixed").final_count == 6
+        P.extract_pipeline(spark, store, "mixed", str(tmp_path / "extract.csv"))
+        out = str(tmp_path / "pub")
+        qa = P.publish_opendata(spark, store, "mixed", out)
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
+
+    back = read_csv(spark, out)
+    assert back.columns == ["objectid", "textfield", "lng", "lat"]
+    rows = {int(r.objectid): r for r in back.collect()}
+    got = {k: (float(r.lng), float(r.lat)) for k, r in rows.items() if r.lng is not None}
+    want = {1: lonlat[1], 2: (-75.0, 40.1), 3: (-75.1, 39.95), 4: (-75.25, 40.01), 5: lonlat[5]}
+    assert got.keys() == want.keys()
+    for k, (lon, lat) in want.items():
+        assert abs(got[k][0] - lon) < 1e-7 and abs(got[k][1] - lat) < 1e-7, (k, got[k])
+    assert rows[6].lng is None and rows[6].lat is None
+    detail = next(c.detail for c in qa.checks if c.name == "metric[published_coordinates]")
+    assert "unsupported_srid=1" in detail
+
+
+def test_publish_projection_plan_stays_small(spark, tmp_path, staged_csv, monkeypatch):
+    """Guard against a repeated subtree coming back into the publish
+    reprojection: Spark copies a subexpression per reference, so a
+    step that reads its input twice doubles the plan per unrolled
+    iteration (about 180k characters for the six LCC latitude steps,
+    which fails the 64 KB compile). The linear form is about 4.5k."""
+    store = TableStore(spark, str(tmp_path / "wh"))
+    P.load_pipeline(spark, staged_csv, SCHEMA, store, "pt", mode="truncate")
+    written = []
+    real_write_csv = P.write_csv
+
+    def capture(df, path, **kw):
+        written.append(df)
+        return real_write_csv(df, path, **kw)
+
+    monkeypatch.setattr(P, "write_csv", capture)
+    P.publish_opendata(spark, store, "pt", str(tmp_path / "pub"))
+    plan = written[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert len(plan) < 20_000, (
+        f"publish projection plan is {len(plan)} characters; a subexpression "
+        "is probably referenced more than once per unrolled step"
+    )
 
 
 def test_load_rename_replace_recreates_on_drift(spark, tmp_path, staged_csv):
