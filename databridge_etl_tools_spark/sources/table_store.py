@@ -13,7 +13,13 @@ the unit under test for the pipelines).
 
 Scale notes: version directories are plain parquet datasets —
 readers at any parallelism scan them directly; the manifest flip is
-one tiny file rename, never a data rewrite of the old version.
+one tiny file rename, never a data rewrite of the old version. Every
+flip records the table's Spark schema (and so does its commit-log
+entry), so planning a read of any state costs no Spark job: no footer
+inference, just a driver-side file listing under the recorded schema.
+An empty table (fresh ``create_table``, ``truncate``) has no data
+segment at all — its state is an empty segment list plus the schema,
+and it reads as a zero-row scan of no files.
 """
 
 from __future__ import annotations
@@ -28,6 +34,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..schema import TableSchema, schema_drift
+
+
+def _segs(entry: dict) -> list[str]:
+    """Segment list of a manifest or commit-log entry. ``current`` is
+    a single name for tables written before incremental appends
+    existed — served as a one-segment list (manifest migration is
+    read-side, never a rewrite)."""
+    cur = entry["current"]
+    return [cur] if isinstance(cur, str) else list(cur)
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """The type Spark writes to (and reads back from) parquet: every
+    field, array element and map value nullable, field metadata kept —
+    what ``spark.read.parquet`` reports for a frame of type ``dt``."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 def _check_commit(op: str, table: str, commit: int, n: int) -> int:
@@ -62,11 +92,28 @@ class TableStore:
 
     def _segments(self, table: str) -> list[str]:
         """Version directories making up the current table state, in
-        commit order. ``current`` is a single name for tables written
-        before incremental appends existed — served as a one-segment
-        list (manifest migration is read-side, never a rewrite)."""
-        cur = self._read_manifest(table)["current"]
-        return [cur] if isinstance(cur, str) else list(cur)
+        commit order (empty for an empty table)."""
+        return _segs(self._read_manifest(table))
+
+    def _schema(self, table: str, entry: "dict | None" = None) -> T.StructType:
+        """Spark schema of the current state, or of a manifest /
+        commit-log ``entry``: recorded by the commit, so no job. An
+        entry written before schemas were recorded is inferred from
+        its segments' footers (one Spark job); the table's next commit
+        records it."""
+        entry = self._read_manifest(table) if entry is None else entry
+        if "schema" in entry:
+            return T.StructType.fromJson(entry["schema"])
+        paths = [os.path.join(self._dir(table), s) for s in _segs(entry)]
+        return self.spark.read.option("mergeSchema", "true").parquet(*paths).schema
+
+    def _scan(self, table: str, segs: "list[str]", schema: T.StructType) -> DataFrame:
+        """The store's one read: ``segs`` scanned under ``schema``.
+        Planning lists the segment directories on the driver and
+        starts no job; a column a pre-evolution segment lacks reads as
+        NULL; no segments (an empty table) is a zero-row scan."""
+        base = self._dir(table)
+        return self.spark.read.schema(schema).parquet(*[os.path.join(base, s) for s in segs])
 
     def _current_data_dir(self, table: str) -> str:
         segs = self._segments(table)
@@ -84,19 +131,32 @@ class TableStore:
         return version
 
     def _flip(
-        self, table: str, version: str | list[str], props: dict | None = None
+        self,
+        table: str,
+        version: str | list[str],
+        props: dict | None = None,
+        schema: T.StructType | None = None,
     ) -> None:
         """Atomic pointer flip: write manifest to a temp name, rename
         over the old one (rename is atomic on POSIX; on a real
         lakehouse this is the Delta/Iceberg commit). ``version`` may
         be a segment LIST — the incremental-append commit: the new
-        manifest references old segments + the delta, no data moves."""
+        manifest references old segments + the delta, no data moves.
+
+        ``schema`` is the committed state's Spark schema (the written
+        frame's, recorded as parquet stores it: all nullable); None
+        keeps the current one. Manifest and log entry both carry it,
+        so reads of any commit plan without inference."""
         os.makedirs(self._dir(table), exist_ok=True)
         old = {}
         if os.path.exists(self._manifest(table)):
             old = self._read_manifest(table)
+        if schema is None:  # keep the current schema; a first commit infers its own
+            schema = self._schema(table, old or {"current": version})
+        schema = _nullable(schema).jsonValue()
         doc = {
             "current": version,
+            "schema": schema,
             "properties": {**old.get("properties", {}), **(props or {})},
         }
         tmp = self._manifest(table) + f".tmp-{uuid.uuid4().hex[:6]}"
@@ -108,7 +168,7 @@ class TableStore:
         # over. Written AFTER the flip: the log may lag the manifest by
         # one commit in a crash, never lead it.
         with open(os.path.join(self._dir(table), "_commits.jsonl"), "a") as f:
-            f.write(json.dumps({"current": version}) + "\n")
+            f.write(json.dumps({"current": version, "schema": schema}) + "\n")
 
     # -- lifecycle (D1-D6) ----------------------------------------------
     def exists(self, table: str) -> bool:
@@ -132,15 +192,13 @@ class TableStore:
                 "geometry": schema.geometry_fields,
             }
         if self.exists(table):
-            drift = schema_drift(struct, self.read(table).schema)
+            drift = schema_drift(struct, self._schema(table))
             if not drift:
                 return False
             if not recreate_on_drift:
                 raise ValueError(f"schema drift on {table}: {drift}")
             self.drop(table)
-        empty = self.spark.createDataFrame([], struct)
-        v = self._write_version(table, empty)
-        self._flip(table, v, props)
+        self._flip(table, [], props, struct)  # empty: no data segment
         return True
 
     def drop(self, table: str, if_exists: bool = True) -> None:
@@ -152,12 +210,11 @@ class TableStore:
         shutil.rmtree(self._dir(table))
 
     def truncate(self, table: str) -> None:
-        """D4/D5: keep schema, remove rows — a new empty version
-        (joins the 'transaction' in the sense that readers see either
-        the old version or the new one, never a half state)."""
-        schema = self.read(table).schema
-        v = self._write_version(table, self.spark.createDataFrame([], schema))
-        self._flip(table, v)
+        """D4/D5: keep schema, remove rows — a flip to the empty
+        segment list, no data written (joins the 'transaction' in the
+        sense that readers see either the old state or the empty one,
+        never a half state)."""
+        self._flip(table, [])
 
     def overwrite(
         self, table: str, df: DataFrame, select_users: list[str] | None = None
@@ -173,7 +230,7 @@ class TableStore:
         new version without its grants."""
         v = self._write_version(table, df)
         props = {"grants": {"select": select_users}} if select_users is not None else None
-        self._flip(table, v, props)
+        self._flip(table, v, props, df.schema)
 
     def append(self, table: str, df: DataFrame, evolve: bool = False) -> None:
         """K1 append, O(delta): write ONLY the new rows as a fresh
@@ -187,34 +244,35 @@ class TableStore:
         mergeSchema contract): new columns append with the delta,
         old segments read them as NULL. Dropping or retyping columns
         stays a drift-recreate (D1) — never silent."""
-        existing = self.read(table)  # schema check against live state
-        missing = set(existing.columns) - set(df.columns)
+        schema = self._schema(table)  # schema check against live state
+        cols = schema.fieldNames()
+        missing = set(cols) - set(df.columns)
         if missing:
             raise ValueError(f"append to {table} missing columns: {sorted(missing)}")
-        extra = [c for c in df.columns if c not in set(existing.columns)]
+        extra = [c for c in df.columns if c not in set(cols)]
         if extra and not evolve:
             raise ValueError(
                 f"append to {table} adds columns {extra}; pass evolve=True "
                 f"for additive schema evolution"
             )
-        cols = existing.columns + (extra if evolve else [])
-        v = self._write_version(table, df.select(*cols))
-        self._flip(table, self._segments(table) + [v])
+        v = self._write_version(table, df.select(*cols, *extra))
+        evolved = T.StructType(schema.fields + [df.schema[c] for c in extra])
+        self._flip(table, self._segments(table) + [v], schema=evolved)
 
     def read(self, table: str) -> DataFrame:
-        base = self._dir(table)
-        paths = [os.path.join(base, s) for s in self._segments(table)]
-        if len(paths) == 1:
-            return self.spark.read.parquet(paths[0])
-        # multi-segment: merge footers so additively-evolved columns
-        # surface (NULL for pre-evolution segments). At 100 TB the
-        # footer merge is why compaction back to one schema matters.
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        """The current state, planned from the recorded schema: no
+        Spark job until an action. Additively-evolved columns read as
+        NULL from pre-evolution segments; an empty table is a zero-row
+        scan of no files."""
+        m = self._read_manifest(table)
+        return self._scan(table, _segs(m), self._schema(table, m))
 
     def history(self, table: str) -> "list[dict]":
         """The table's commit log, oldest first: one entry per manifest
-        flip (`{"current": version-or-segment-list}`). The local twin
-        of DESCRIBE HISTORY on a lakehouse table."""
+        flip (`{"current": version-or-segment-list, "schema": ...}`;
+        entries written before schemas were recorded have no
+        ``schema``). The local twin of DESCRIBE HISTORY on a lakehouse
+        table."""
         path = os.path.join(self._dir(table), "_commits.jsonl")
         if not os.path.exists(path):
             return []
@@ -240,18 +298,14 @@ class TableStore:
         if not log:
             raise ValueError(f"read_version: {table} has no commit log")
         entry = log[_check_commit("read_version", table, commit, len(log))]
-        segs = entry["current"]
-        segs = [segs] if isinstance(segs, str) else list(segs)
+        segs = _segs(entry)
         base = self._dir(table)
         missing = [s for s in segs if not os.path.exists(os.path.join(base, s))]
         if missing:
             raise ValueError(
                 f"read_version: commit {commit} data vacuumed: {missing}"
             )
-        paths = [os.path.join(base, s) for s in segs]
-        if len(paths) == 1:
-            return self.spark.read.parquet(paths[0])
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        return self._scan(table, segs, self._schema(table, entry))
 
     def restore(self, table: str, commit: int) -> None:
         """Roll the table back to commit ``commit`` (indexes like
@@ -264,13 +318,11 @@ class TableStore:
         if not log:
             raise ValueError(f"restore: {table} has no commit log")
         entry = log[_check_commit("restore", table, commit, len(log))]
-        segs = entry["current"]
-        segs_list = [segs] if isinstance(segs, str) else list(segs)
         base = self._dir(table)
-        missing = [s for s in segs_list if not os.path.exists(os.path.join(base, s))]
+        missing = [s for s in _segs(entry) if not os.path.exists(os.path.join(base, s))]
         if missing:
             raise ValueError(f"restore: commit {commit} data vacuumed: {missing}")
-        self._flip(table, segs)
+        self._flip(table, entry["current"], schema=self._schema(table, entry))
 
     def empty_clone_view(self, table: str, view_name: str) -> DataFrame:
         """D2: CREATE TEMPORARY TABLE … WHERE 1=0
@@ -298,7 +350,10 @@ class TableStore:
         """D9/OPTIMIZE analogue: rewrite the current version with a
         right-sized file count (append mode accretes small files; at
         scale this is the bin-packing compaction every lakehouse
-        runs). Returns the new partition count."""
+        runs). Returns the new partition count; an empty table has no
+        data segment to pack, so it commits nothing and returns 0."""
+        if not self._segments(table):
+            return 0
         df = self.read(table)
         if target_partitions is None:
             # ~128MB files assuming parquet compresses the in-memory
@@ -344,8 +399,9 @@ class TableStore:
         return nxt
 
     def analyze(self, table: str) -> dict:
-        """D9 VACUUM ANALYZE analogue: recompute row count stats."""
-        n = self.read(table).count()
+        """D9 VACUUM ANALYZE analogue: recompute row count stats, from
+        parquet footers on the driver (no Spark job)."""
+        n = self._table_rows(table)
         self.set_properties(table, rowcount=n)
         return {"rowcount": n}
 
@@ -453,14 +509,17 @@ class TableStore:
             table,
             v,
             {**self._epoch_props(table, epoch_id, scope), **(extra_props or {})},
+            df.schema,
         )
         return True
 
     #: auto-compaction threshold for epoch appends: once a sink table
     #: accretes this many delta segments, the NEXT epoch commit folds
-    #: them into one (read amplification stays bounded — every read
-    #: merges parquet footers per segment, so unbounded accretion
-    #: turns O(delta) writes into O(segments) reads).
+    #: them into one. Planning a read costs no job (the schema is
+    #: recorded, never inferred from footers), but every segment is
+    #: one more directory to list and at least one more file to open
+    #: per scan, so unbounded accretion turns O(delta) writes into
+    #: O(segments) reads. An empty table has no segment at all.
     SEGMENT_BUDGET = 32
 
     #: adaptive data-skipping threshold for :meth:`upsert_epoch`:
@@ -502,15 +561,17 @@ class TableStore:
         this commit compacts them together with the delta into one
         segment inside the same atomic flip — amortized O(delta) per
         batch (each row is rewritten once per ``budget`` appends),
-        worst-case read amplification capped at ``budget`` footer
-        merges. ``vacuum`` reclaims the folded-away directories."""
+        worst-case read amplification capped at ``budget`` segment
+        directories per scan (planning still costs no job: the schema
+        is recorded). ``vacuum`` reclaims the folded-away
+        directories."""
         if self.epoch_seen(table, epoch_id, scope):
             return False
         if not self.exists(table):
             v = self._write_version(table, delta)
-            self._flip(table, v, self._epoch_props(table, epoch_id, scope))
+            self._flip(table, v, self._epoch_props(table, epoch_id, scope), delta.schema)
             return True
-        cols = self.read(table).columns
+        cols = self._schema(table).fieldNames()
         missing = set(cols) - set(delta.columns)
         if missing:
             raise ValueError(
@@ -578,12 +639,10 @@ class TableStore:
 
     def _read_segments(self, table: str, segs: "list[str]") -> DataFrame:
         """Read a SUBSET of a table's segments (the data-skipping
-        read: only the segments a key probe could not rule out)."""
-        base = self._dir(table)
-        paths = [os.path.join(base, s) for s in segs]
-        if len(paths) == 1:
-            return self.spark.read.parquet(paths[0])
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        read: only the segments a key probe could not rule out) under
+        the table's schema — columns a segment predates read as
+        NULL."""
+        return self._scan(table, segs, self._schema(table))
 
     def _table_rows(self, table: str) -> int:
         """Row count of the current table state from parquet footer
@@ -602,36 +661,6 @@ class TableStore:
                         os.path.join(seg_dir, f)
                     ).num_rows
         return total
-
-    def _table_columns(self, table: str) -> "list[str]":
-        """Column names of the table under additive evolution:
-        union of per-segment parquet schemas, first-seen order — what
-        a mergeSchema read reports, computed DRIVER-SIDE from one
-        footer per segment (a streaming sink calls this every
-        micro-batch; a Spark mergeSchema job just for names is pure
-        scheduler floor)."""
-        import pyarrow.parquet as pq
-
-        base = self._dir(table)
-        cols: "list[str]" = []
-        seen = set()
-        for seg in self._segments(table):
-            seg_dir = os.path.join(base, seg)
-            part = next(
-                (
-                    f
-                    for f in sorted(os.listdir(seg_dir))
-                    if f.endswith(".parquet")
-                ),
-                None,
-            )
-            if part is None:
-                continue
-            for name in pq.read_schema(os.path.join(seg_dir, part)).names:
-                if name not in seen:
-                    seen.add(name)
-                    cols.append(name)
-        return cols
 
     #: saturation guard: a segment with more keys than this (an
     #: eighth of the bloom's bits) would saturate the fixed-width
@@ -693,7 +722,7 @@ class TableStore:
         budget = (
             self.SEGMENT_BUDGET if segment_budget is None else segment_budget
         )
-        base = self._dir(table)
+        schema = self._schema(table)
         props = self._epoch_props(table, epoch_id, scope)
 
         def _stats_props(blooms: dict, ranges: dict) -> dict:
@@ -715,8 +744,7 @@ class TableStore:
             )
             blooms = {}
             if self._segment_rows(table, v) <= self.BLOOM_MAX_KEYS:
-                folded = self.spark.read.parquet(os.path.join(base, v))
-                blooms[v] = bloom_build(folded, keys)
+                blooms[v] = bloom_build(self._scan(table, [v], schema), keys)
             ranges = {v: fold_range} if fold_range is not None else {}
             self._flip(table, v, _stats_props(blooms, ranges))
             return True
@@ -741,7 +769,7 @@ class TableStore:
             bloom_src = (
                 new_df
                 if new_df_materialized
-                else self.spark.read.parquet(os.path.join(base, v))
+                else self._scan(table, [v], schema)
             )
             blooms[v] = bloom_build(bloom_src, keys)
         if new_range is not None:
@@ -883,7 +911,7 @@ class TableStore:
             merged = upsert(existing, batch, keys, staging_order)
             return self.commit_epoch(table, merged, epoch_id, scope=scope)
 
-        cols = self._table_columns(table)  # driver-side footer read
+        cols = self._schema(table).fieldNames()
         batch = batch.select(*cols).localCheckpoint()
         if staging_order is not None:
             # intra-batch tiebreak up front: the all-new fast path
@@ -987,12 +1015,6 @@ class TableStore:
             )
 
         existing_sub = self._read_segments(table, subset)
-        missing_cols = [c for c in cols if c not in existing_sub.columns]
-        for c in missing_cols:  # pre-evolution segments: NULL-pad
-            existing_sub = existing_sub.withColumn(
-                c, F.lit(None).cast(batch.schema[c].dataType)
-            )
-        existing_sub = existing_sub.select(*cols)
         slow = staging_order is not None
         if not slow:
             changed = batch.exceptAll(existing_sub).join(

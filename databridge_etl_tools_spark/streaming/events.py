@@ -458,9 +458,7 @@ def stream_scd2_into_store(
                     table, **store._epoch_props(table, epoch_id, scope)
                 )
                 return
-            hist = store.read(table)
         else:
-            spark = batch_df.sparkSession
             hist_schema = T.StructType(
                 [snap.schema[c] for c in keys + list(track_cols)]
                 + [
@@ -468,8 +466,8 @@ def stream_scd2_into_store(
                     T.StructField("valid_to", T.DateType()),
                 ]
             )
-            hist = spark.createDataFrame([], hist_schema)
             store.create_table(table, hist_schema)
+        hist = store.read(table)
         evolved = scd2_apply(hist, snap, keys, track_cols, batch_date)
         store.commit_epoch(
             table,

@@ -3,12 +3,17 @@
 from __future__ import annotations
 
 import json
+from contextlib import contextmanager
+from datetime import date, datetime
+from decimal import Decimal
+from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from databridge_etl_tools_spark.schema import TableSchema, schema_drift
-from databridge_etl_tools_spark.sources.table_store import TableStore
+from databridge_etl_tools_spark.sources.table_store import TableStore, _segs
 
 POINT_SCHEMA = {
     "primaryKey": ["objectid"],
@@ -272,3 +277,267 @@ def test_store_restore_rolls_back(spark, tmp_path):
     store.vacuum("t")  # current survives, the other version goes
     with _pytest.raises(ValueError):
         store.restore("t", 1)
+
+
+# -- recorded schema: reads plan without jobs ---------------------------
+
+WIDE = T.StructType(
+    [
+        T.StructField("id", T.LongType(), False, {"comment": "primary key"}),
+        T.StructField(
+            "nested",
+            T.StructType(
+                [
+                    T.StructField("x", T.IntegerType(), False),
+                    T.StructField("tags", T.ArrayType(T.StringType(), False)),
+                ]
+            ),
+        ),
+        T.StructField("attrs", T.MapType(T.StringType(), T.DoubleType(), False)),
+        T.StructField("amount", T.DecimalType(12, 3)),
+        T.StructField("day", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("ts_ntz", T.TimestampNTZType()),
+    ]
+)
+
+
+def _wide_rows(lo: int, hi: int):
+    return [
+        (
+            i,
+            (i * 2, [f"t{i}"]),
+            {"k": float(i)},
+            Decimal(i) / 8,
+            date(2024, 1, 1 + i % 28),
+            datetime(2024, 1, 1, i % 24),
+            datetime(2024, 1, 2, i % 24),
+        )
+        for i in range(lo, hi)
+    ]
+
+
+def _inferred(spark, store, table, segs=None):
+    """What Spark infers from the table's segment directories — the
+    schema a footer-merging read reports."""
+    segs = store._segments(table) if segs is None else segs
+    paths = [str(Path(store._dir(table)) / s) for s in segs]
+    return spark.read.option("mergeSchema", "true").parquet(*paths).schema
+
+
+@contextmanager
+def _jobs_started(spark):
+    """Ids of the Spark jobs started inside the block, read back from
+    the status tracker under a unique job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"guard-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "zero-job guard")
+    started: list = []
+    try:
+        yield started
+    finally:
+        started.extend(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_recorded_schema_equals_parquet_inference(spark, tmp_path):
+    """read() plans from the recorded schema; it must be exactly what
+    inference over the segment directories reports — nested types,
+    decimal, date, both timestamps and field metadata included, and
+    the footer merge of additively evolved segments."""
+    store = TableStore(spark, str(tmp_path / "wide"))
+    df = spark.createDataFrame(_wide_rows(0, 20), WIDE)
+    store.overwrite("t", df)
+    assert store.read("t").schema == _inferred(spark, store, "t")
+    assert store.read("t").schema["id"].metadata == {"comment": "primary key"}
+    assert store.read("t").count() == 20
+
+    extra = T.StructField(
+        "extra",
+        T.StructType([T.StructField("note", T.StringType(), False)]),
+        False,
+        {"comment": "added later"},
+    )
+    delta = spark.createDataFrame(
+        [r + (("n",),) for r in _wide_rows(20, 25)], T.StructType(WIDE.fields + [extra])
+    )
+    store.append("t", delta, evolve=True)
+    got = store.read("t")
+    assert len(store._segments("t")) == 2
+    assert got.schema == _inferred(spark, store, "t")
+    assert got.where(F.col("extra").isNull()).count() == 20
+    assert got.where(F.col("extra.note") == "n").count() == 5
+    # every commit in the log plans the same way
+    for i, entry in enumerate(store.history("t")):
+        assert store.read_version("t", i).schema == _inferred(
+            spark, store, "t", _segs(entry)
+        )
+
+
+def test_empty_table_schema_matches_an_empty_parquet_version(spark, tmp_path):
+    """create_table/truncate write no data; reading the empty state
+    reports what inference over an empty parquet write reports."""
+    store = TableStore(spark, str(tmp_path / "empty"))
+    store.create_table("t", WIDE)
+    ref = tmp_path / "ref"
+    spark.createDataFrame([], WIDE).write.parquet(str(ref))
+    expected = spark.read.parquet(str(ref)).schema
+    assert store.read("t").schema == expected
+    store.overwrite("t", spark.createDataFrame(_wide_rows(0, 5), WIDE))
+    store.truncate("t")
+    assert store.read("t").schema == expected
+    assert store.read("t").count() == 0
+
+
+def test_reads_and_empty_lifecycle_start_no_spark_job(spark, tmp_path):
+    store = TableStore(spark, str(tmp_path / "guard"))
+    df = spark.createDataFrame(_wide_rows(0, 10), WIDE)
+    store.overwrite("t", df)
+    store.append("t", df)
+
+    with _jobs_started(spark) as jobs:
+        store.read("t")
+    assert jobs == [], "read() planned with a job"
+    with _jobs_started(spark) as jobs:
+        store.read_version("t", 0)
+        store.read_version("t", -1)
+    assert jobs == [], "read_version() planned with a job"
+    with _jobs_started(spark) as jobs:
+        assert store.analyze("t") == {"rowcount": 20}
+    assert jobs == [], "analyze() counted with a job"
+    with _jobs_started(spark) as jobs:
+        store.truncate("t")
+        store.read("t")
+    assert jobs == [], "truncate() wrote data"
+    with _jobs_started(spark) as jobs:
+        assert store.create_table("new", WIDE) is True
+        assert store.create_table("new", WIDE) is False  # drift check
+        store.read("new")
+        assert store.analyze("new") == {"rowcount": 0}
+    assert jobs == [], "create_table() wrote data"
+
+    # the guard sees a job when one runs
+    with _jobs_started(spark) as jobs:
+        store.read_version("t", 0).count()
+    assert jobs, "guard blind: an action started no job"
+
+
+def test_empty_table_lifecycle_has_no_data_segment(spark, tmp_path):
+    import os
+
+    store = TableStore(spark, str(tmp_path / "life"))
+    base = tmp_path / "life" / "t"
+    schema = T.StructType(
+        [T.StructField("k", T.LongType(), False), T.StructField("v", T.StringType())]
+    )
+    store.create_table("t", schema)
+    assert store._segments("t") == []
+    assert not [d for d in os.listdir(base) if d.startswith("v-")]
+    assert store.read("t").count() == 0
+    assert store.read("t").columns == ["k", "v"]
+
+    rows = spark.createDataFrame([(1, "a"), (2, "b")], schema)
+    store.append("t", rows)
+    assert len(store._segments("t")) == 1
+    assert sorted(r.k for r in store.read("t").collect()) == [1, 2]
+
+    store.truncate("t")
+    assert store._segments("t") == []
+    assert store.read("t").count() == 0
+    assert store.read("t").schema == store.read_version("t", 1).schema
+
+    # restore to the empty create, then back to the appended commit
+    store.restore("t", 0)
+    assert store._segments("t") == [] and store.read("t").count() == 0
+    store.restore("t", 1)
+    assert store.read("t").count() == 2
+    store.truncate("t")
+
+    # compact of an empty table: nothing to pack, no data segment
+    n_commits = len(store.history("t"))
+    assert store.compact("t") == 0
+    assert store._segments("t") == []
+    assert len(store.history("t")) == n_commits
+    # vacuum removes every unreferenced version, the table stays readable
+    assert len(store.vacuum("t")) == 1
+    assert not [d for d in os.listdir(base) if d.startswith("v-")]
+    assert store.read("t").count() == 0
+    assert store.read_version("t", 0).count() == 0  # nothing to vacuum
+    with pytest.raises(ValueError, match="vacuumed"):
+        store.read_version("t", 1)
+    store.append("t", rows)
+    assert store.read("t").count() == 2
+
+
+def test_legacy_manifest_without_schema_is_inferred_then_recorded(spark, tmp_path):
+    """A manifest and log written before schemas were recorded read by
+    footer inference; the table's next commit records the schema."""
+    store = TableStore(spark, str(tmp_path / "legacy_schema"))
+    df = spark.createDataFrame(_wide_rows(0, 6), WIDE)
+    store.overwrite("t", df)
+    store.append("t", df)
+    m = store._read_manifest("t")
+    del m["schema"]
+    with open(store._manifest("t"), "w") as f:
+        json.dump(m, f)
+    log = Path(store._dir("t")) / "_commits.jsonl"
+    entries = [json.loads(l) for l in log.read_text().splitlines()]
+    log.write_text("".join(json.dumps({"current": e["current"]}) + "\n" for e in entries))
+
+    expected = _inferred(spark, store, "t")
+    assert store.read("t").schema == expected
+    assert store.read("t").count() == 12
+    assert store.read_version("t", 0).count() == 6
+    assert store._read_manifest("t").get("schema") is None
+
+    store.set_properties("t", owner="ops")  # next commit records it
+    assert T.StructType.fromJson(store._read_manifest("t")["schema"]) == expected
+    with _jobs_started(spark) as jobs:
+        store.read("t")
+    assert jobs == []
+    store.truncate("t")
+    assert store.read("t").schema == expected
+    store.restore("t", 0)  # a legacy log entry: inferred again
+    assert store.read("t").count() == 6
+    assert store.read("t").schema == expected
+
+
+def test_legacy_empty_version_truncates_and_appends(spark, tmp_path):
+    """An empty table written before this layout (an empty parquet
+    version, no recorded schema) reads, truncates and appends."""
+    store = TableStore(spark, str(tmp_path / "legacy_empty"))
+    schema = T.StructType([T.StructField("k", T.LongType())])
+    v = store._write_version("t", spark.createDataFrame([], schema))
+    with open(store._manifest("t"), "w") as f:
+        json.dump({"current": v, "properties": {}}, f)
+    assert store.read("t").count() == 0
+    store.truncate("t")
+    assert store._segments("t") == []
+    assert store.read("t").schema == spark.read.parquet(str(Path(store._dir("t")) / v)).schema
+    store.append("t", spark.range(3).toDF("k"))
+    assert store.read("t").count() == 3
+
+
+def test_keyed_upsert_reads_pre_evolution_segments_as_null(spark, tmp_path):
+    """The bloom/zone-map path reads candidate segments under the
+    table's schema: a changed key in a segment written before an
+    additive evolution merges with the evolved column as NULL."""
+    store = TableStore(spark, str(tmp_path / "evo_keyed"))
+    store.BLOOM_MIN_ROWS = 0  # take the data-skipping path on a small table
+    base = spark.createDataFrame([(i, f"v{i}") for i in range(10)], "k long, v string")
+    assert store.upsert_epoch("t", base, ["k"], 0, scope="s")
+    evolved = spark.createDataFrame(
+        [(i, f"v{i}", "x") for i in range(10, 15)], "k long, v string, tag string"
+    )
+    store.append("t", evolved, evolve=True)
+    batch = spark.createDataFrame([(3, "CHANGED", "y"), (20, "new", None)], "k long, v string, tag string")
+    assert store.upsert_epoch("t", batch, ["k"], 1, scope="s")
+    got = {r.k: (r.v, r.tag) for r in store.read("t").collect()}
+    assert len(got) == 16
+    assert got[3] == ("CHANGED", "y")
+    assert got[4] == ("v4", None)
+    assert got[12] == ("v12", "x")
+    assert got[20] == ("new", None)
+    assert store.read("t").schema == _inferred(spark, store, "t")
