@@ -238,13 +238,10 @@ def main() -> None:
     # lane (it does not set this env), so its numbers are unaffected.
     lane = os.environ.get("SPARK_GRAFT_BENCH_LANE", "")
     if lane == "dist":
-        for k in (
-            "SPARK_GRAFT_GRAPH_DRIVER_EDGES",
-            "SPARK_GRAFT_ORDERSTATS_DRIVER_ROWS",
-            "SPARK_GRAFT_ANN_DRIVER_ROWS",
-            "SPARK_GRAFT_BPE_DRIVER_VOCAB",
-        ):
-            os.environ.setdefault(k, "0")
+        from databridge_etl_tools_spark.operators.route import BUDGETS
+
+        for env, _ in BUDGETS.values():
+            os.environ.setdefault(env, "0")
 
     import __spark_entry__ as ent
     from databridge_etl_tools_spark.session import get_session

@@ -55,6 +55,7 @@ from collections.abc import Iterator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import route
 from .materialize import materialize
 from .textstats import tokens
 from .util import maybe_broadcast
@@ -278,30 +279,6 @@ def _fit_words_py(
     return merges, units
 
 
-#: vocabulary budget for the driver-side BPE rounds: a (word, freq)
-#: table at or under this row count is collected and the merge loop
-#: runs as in-memory delta updates (pair types are character-/subword-
-#: bigram-bounded, orders of magnitude below the vocabulary); above
-#: it the distributed per-round loop is the honest path — at 100 TB
-#: a Heaps-law vocabulary is 10^8+ rows and must never land on the
-#: driver. Same size-aware routing discipline as util.maybe_broadcast
-#: and the |sources|-bounded pagerank_py walk.
-DRIVER_VOCAB_BUDGET = 1_000_000
-
-
-def _driver_vocab_budget() -> int:
-    """Resolve the routing budget at call time so the distributed
-    bench lane (``SPARK_GRAFT_BPE_DRIVER_VOCAB=0``) and the parity
-    tests can toggle it per process; unset keeps the module default."""
-    import os
-
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_BPE_DRIVER_VOCAB", str(DRIVER_VOCAB_BUDGET)
-        )
-    )
-
-
 def bpe_fit_words(
     docs: DataFrame,
     *,
@@ -335,26 +312,26 @@ def bpe_fit_words(
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
         .withColumn("_toks", _chars())
     )
-    # size-aware routing: the merge LOOP is vocabulary-sized work
-    # with a sequential dependence between rounds — at demo scale the
-    # 2·n_merges fixed-latency jobs dominate it (measured ~0.4 s per
-    # round for a 50 k-word table). When the vocabulary fits the
-    # driver budget, run the rounds as in-memory delta updates
-    # (bit-identical: pinned against the distributed loop in
-    # tests/test_bpe.py) and rebuild the finished word table; past
-    # the budget the distributed per-round loop below is the honest
-    # path. One bounded count probe decides.
+    # size-aware routing (``operators.route``): the merge LOOP is
+    # vocabulary-sized work with a sequential dependence between
+    # rounds — at demo scale the 2·n_merges fixed-latency jobs
+    # dominate it (measured ~0.4 s per round for a 50 k-word table).
+    # When the (word, freq) table fits the driver budget (pair types
+    # are bigram-bounded, far below the vocabulary), run the rounds
+    # as in-memory delta updates (bit-identical: pinned against the
+    # distributed loop in tests/test_bpe.py) and rebuild the finished
+    # word table; past the budget — at 100 TB a Heaps-law vocabulary
+    # is 10^8+ rows — the distributed per-round loop below is the
+    # honest path. One bounded collect decides.
     if driver_vocab_budget is None:
-        driver_vocab_budget = _driver_vocab_budget()
-    if (
-        driver_vocab_budget > 0
-        and words.agg(F.count(F.lit(1))).collect()[0][0]
-        <= driver_vocab_budget
-    ):
-        rows = [
-            (r["w"], int(r["freq"]))
-            for r in words.select("w", "freq").collect()
-        ]
+        driver_vocab_budget = route.budget("bpe")
+    tbl = route.collect_bounded(
+        words.select("w", "freq"), driver_vocab_budget
+    )
+    if tbl is not None:
+        rows = list(
+            zip(tbl.column("w").to_pylist(), tbl.column("freq").to_pylist())
+        )
         merges, units = _fit_words_py(rows, n_merges, min_count, sep)
         fdict = dict(rows)
         final = docs.sparkSession.createDataFrame(

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import route
+
 Q_RANK = 40  #: per-node rank fixed point (initial rank = 2^40)
 
 
@@ -67,42 +69,30 @@ def _require_integral(df: DataFrame, col: str, op: str) -> None:
         )
 
 
-def _driver_route_arrays(
-    e: DataFrame, cols: "list[str]", n_edges: "int | None" = None
-):
-    """Size-probe + Arrow collect for the numpy driver route (see
-    ``operators.graph_np``): at or under ``graph_np.edge_budget()``
-    the columns come back as numpy arrays and the caller runs the
-    exact fixpoint driver-side; past it (or numpy missing, or NULLs
-    in any column) returns None and the distributed loop proceeds
-    untouched. Probe and collect are ONE pass (r14 advisor/verdict
-    item): a single plain parallel Arrow collect, bounded after the
-    fact by the row budget and by Spark's own
-    ``spark.driver.maxResultSize`` abort (caught → fallback) — see
-    ``graph_np.collect_cols_bounded`` for why the former
-    ``limit(budget+1)`` probe was replaced (CollectLimit's
-    incremental partition ramp serialized the routed collect; r15
-    measured 3.08 s → 0.67 s on a 3.6M-edge lineage)."""
-    from . import graph_np
-
-    budget = graph_np.edge_budget()
-    if budget <= 0:
-        return None
-    try:
-        import numpy  # noqa: F401
-    except ImportError:  # pragma: no cover - numpy ships with pyspark
-        return None
+def _driver_route_arrays(e: DataFrame, cols: "list[str]"):
+    """The edge selection's ``cols`` as numpy arrays for the numpy
+    driver route (see ``operators.graph_np``): at or under
+    ``route.budget("graph")`` rows the caller runs the exact fixpoint
+    driver-side; past it (or NULLs in any column, or a maxResultSize
+    abort — see ``route.collect_bounded``) returns None and the
+    distributed loop proceeds untouched."""
     # node columns concatenated into one index universe must share a
     # dtype: the routed result declares _src's type while distributed
     # unionByName coerces to the wider one (r14 advisor item)
     if "_src" in cols and "_dst" in cols:
         if e.schema["_src"].dataType != e.schema["_dst"].dataType:
             return None
-    if n_edges is not None:
-        if n_edges > budget:
-            return None
-        return graph_np.collect_cols(e, cols)
-    return graph_np.collect_cols_bounded(e, cols, budget)
+    tbl = route.collect_bounded(e, route.budget("graph"))
+    return None if tbl is None else route.columns(tbl, cols)
+
+
+def _source_nodes(sources: DataFrame, node_col: str):
+    """The distinct source ids of a routed traversal as one numpy
+    array, or None (over the graph budget, NULL ids or an abort)."""
+    s_df = sources.select(F.col(node_col).alias("node")).distinct()
+    tbl = route.collect_bounded(s_df, route.budget("graph"))
+    s_cols = None if tbl is None else route.columns(tbl, ["node"])
+    return None if s_cols is None else s_cols[0]
 
 
 def _np_result_df(spark, fields):
@@ -224,10 +214,10 @@ def pagerank(
     # checkpoint from the routed path. Over budget / NULLs /
     # uncertifiable int64 headroom → the distributed loop below,
     # untouched.
-    route = _driver_route_arrays(
+    arrays = _driver_route_arrays(
         raw, ["_src", "_dst"] + ([] if weight_col is None else ["_w"])
     )
-    if route is not None:
+    if arrays is not None:
         from pyspark.sql import types as T
 
         from . import graph_np
@@ -256,11 +246,11 @@ def pagerank(
         if routable:
             try:
                 if weight_col is None:
-                    s_a, d_a = graph_np.dedup_pairs(route[0], route[1])
+                    s_a, d_a = graph_np.dedup_pairs(arrays[0], arrays[1])
                     w_a = None
                 else:
                     s_a, d_a, w_a = graph_np.group_pairs(
-                        route[0], route[1], route[2]
+                        arrays[0], arrays[1], arrays[2]
                     )
                     if (
                         not weights_checked
@@ -560,19 +550,19 @@ def label_propagation(
     # numpy driver route — the exact vote/argmax rounds on the
     # collected RAW edge list (normalization happens on the arrays,
     # deleting the distinct/groupBy shuffle; operators.graph_np)
-    route = _driver_route_arrays(
+    arrays = _driver_route_arrays(
         raw, ["_src", "_dst"] + ([] if weight_col is None else ["_w"])
     )
-    if route is not None:
+    if arrays is not None:
         from . import graph_np
 
         try:
             if weight_col is None:
-                s_a, d_a = graph_np.dedup_pairs(route[0], route[1])
+                s_a, d_a = graph_np.dedup_pairs(arrays[0], arrays[1])
                 w_a = None
             else:
                 s_a, d_a, w_a = graph_np.group_pairs(
-                    route[0], route[1], route[2]
+                    arrays[0], arrays[1], arrays[2]
                 )
                 if w_a.size and int(w_a.min()) <= 0:
                     raise ValueError(
@@ -694,12 +684,12 @@ def connected_components(
     # (order-isomorphic to node values; duplicate edges are harmless
     # to a MIN fixpoint, so the raw selection routes directly and the
     # distinct shuffle is deleted from the routed path)
-    route = _driver_route_arrays(raw, ["_src", "_dst"])
-    if route is not None:
+    arrays = _driver_route_arrays(raw, ["_src", "_dst"])
+    if arrays is not None:
         from . import graph_np
 
         nd, lab = graph_np.connected_components_np(
-            route[0], route[1], iters=iters
+            arrays[0], arrays[1], iters=iters
         )
         node_t = raw.schema["_src"].dataType
         return _np_result_df(
@@ -773,29 +763,27 @@ def bfs_distances(
     # bounded and share the edge node type (the union of the two
     # columns would otherwise coerce, which only the distributed
     # path owns)
-    route = _driver_route_arrays(e, ["_src", "_dst"])
-    if route is not None and (
+    arrays = _driver_route_arrays(e, ["_src", "_dst"])
+    if arrays is not None and (
         e.schema["_src"].dataType
         == sources.schema[node_col].dataType
     ):
         from . import graph_np
 
-        s_df = sources.select(F.col(node_col).alias("node")).distinct()
-        if s_df.count() <= graph_np.edge_budget():
-            s_cols = graph_np.collect_cols(s_df, ["node"])
-            if s_cols is not None:
-                from pyspark.sql import types as T
+        s_nodes = _source_nodes(sources, node_col)
+        if s_nodes is not None:
+            from pyspark.sql import types as T
 
-                nd, dv = graph_np.bfs_np(
-                    route[0], route[1], s_cols[0], max_hops=max_hops
-                )
-                return _np_result_df(
-                    e.sparkSession,
-                    [
-                        ("node", e.schema["_src"].dataType, nd),
-                        ("dist", T.IntegerType(), dv.astype("int32")),
-                    ],
-                )
+            nd, dv = graph_np.bfs_np(
+                arrays[0], arrays[1], s_nodes, max_hops=max_hops
+            )
+            return _np_result_df(
+                e.sparkSession,
+                [
+                    ("node", e.schema["_src"].dataType, nd),
+                    ("dist", T.IntegerType(), dv.astype("int32")),
+                ],
+            )
     if not edges_ready:
         # dedup + lineage-cut the edge build; edges_ready callers
         # (a deduped catalog/bucketed table) re-scan per hop instead
@@ -851,14 +839,14 @@ def triangle_counts(
     # numpy driver route — degree-ordered wedge enumeration on the
     # collected RAW edge list (dedup on the arrays; falls back past
     # the wedge-volume budget; operators.graph_np)
-    route = _driver_route_arrays(raw, ["_src", "_dst"])
-    if route is not None:
+    arrays = _driver_route_arrays(raw, ["_src", "_dst"])
+    if arrays is not None:
         from pyspark.sql import types as T
 
         from . import graph_np
 
         try:
-            s_a, d_a = graph_np.dedup_pairs(route[0], route[1])
+            s_a, d_a = graph_np.dedup_pairs(arrays[0], arrays[1])
             nd, tv = graph_np.triangle_counts_np(s_a, d_a)
         except graph_np.NpOverflow:
             pass
@@ -944,46 +932,40 @@ def shortest_paths_bounded(
     )
     # numpy driver route — bounded min-plus relaxation driver-side
     # (per-pair MIN normalization happens on the collected arrays)
-    route = _driver_route_arrays(raw, ["_src", "_dst", "_w"])
-    if route is not None and (
+    arrays = _driver_route_arrays(raw, ["_src", "_dst", "_w"])
+    if arrays is not None and (
         raw.schema["_src"].dataType
         == sources.schema[node_col].dataType
     ):
         from . import graph_np
 
-        s_df = sources.select(F.col(node_col).alias("node")).distinct()
-        if s_df.count() <= graph_np.edge_budget():
-            s_cols = graph_np.collect_cols(s_df, ["node"])
-            if s_cols is not None:
-                from pyspark.sql import types as T
+        s_nodes = _source_nodes(sources, node_col)
+        if s_nodes is not None:
+            from pyspark.sql import types as T
 
-                try:
-                    s_a, d_a, w_a = graph_np.group_pairs(
-                        route[0], route[1], route[2], reduce="min"
+            try:
+                s_a, d_a, w_a = graph_np.group_pairs(
+                    arrays[0], arrays[1], arrays[2], reduce="min"
+                )
+                if w_a.size and int(w_a.min()) <= 0:
+                    raise ValueError(
+                        "shortest_paths_bounded: weights must be "
+                        "positive integers, found "
+                        f"{int(w_a.min())}"
                     )
-                    if w_a.size and int(w_a.min()) <= 0:
-                        raise ValueError(
-                            "shortest_paths_bounded: weights must be "
-                            "positive integers, found "
-                            f"{int(w_a.min())}"
-                        )
-                    nd, dv = graph_np.shortest_paths_np(
-                        s_a,
-                        d_a,
-                        w_a,
-                        s_cols[0],
-                        max_hops=max_hops,
-                    )
-                except graph_np.NpOverflow:
-                    pass
-                else:
-                    return _np_result_df(
-                        raw.sparkSession,
-                        [
-                            ("node", raw.schema["_src"].dataType, nd),
-                            ("dist", T.LongType(), dv),
-                        ],
-                    )
+                nd, dv = graph_np.shortest_paths_np(
+                    s_a, d_a, w_a, s_nodes, max_hops=max_hops
+                )
+            except graph_np.NpOverflow:
+                pass
+            else:
+                return _np_result_df(
+                    raw.sparkSession,
+                    [
+                        ("node", raw.schema["_src"].dataType, nd),
+                        ("dist", T.LongType(), dv),
+                    ],
+                )
     e = materialize(
         edges.groupBy(
             F.col(src).alias("_src"), F.col(dst).alias("_dst")
@@ -1088,19 +1070,19 @@ def kcore(
     # numpy driver route — the same peel rounds + early exit on the
     # collected RAW edge list (normalization on the arrays;
     # operators.graph_np)
-    route = _driver_route_arrays(raw, cols)
-    if route is not None:
+    arrays = _driver_route_arrays(raw, cols)
+    if arrays is not None:
         from pyspark.sql import types as T
 
         from . import graph_np
 
         try:
             if weight_col is None:
-                s_a, d_a = graph_np.dedup_pairs(route[0], route[1])
+                s_a, d_a = graph_np.dedup_pairs(arrays[0], arrays[1])
                 w_a = None
             else:
                 s_a, d_a, w_a = graph_np.group_pairs(
-                    route[0], route[1], route[2]
+                    arrays[0], arrays[1], arrays[2]
                 )
             nd, dv = graph_np.kcore_np(
                 s_a, d_a, w_a, k=k, rounds=rounds
@@ -1182,13 +1164,13 @@ def coreness(
     raw = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
     # numpy driver route — successive peeling driver-side (dedup on
     # the collected arrays; operators.graph_np)
-    route = _driver_route_arrays(raw, ["_src", "_dst"])
-    if route is not None:
+    arrays = _driver_route_arrays(raw, ["_src", "_dst"])
+    if arrays is not None:
         from pyspark.sql import types as T
 
         from . import graph_np
 
-        s_a, d_a = graph_np.dedup_pairs(route[0], route[1])
+        s_a, d_a = graph_np.dedup_pairs(arrays[0], arrays[1])
         nd, cv = graph_np.coreness_np(
             s_a, d_a, k_max=k_max, rounds=rounds
         )
@@ -1254,13 +1236,13 @@ def shared_item_pairs(
     raw = df.select(
         F.col(item_col).alias("_i"), F.col(member_col).alias("_m")
     )
-    route = _driver_route_arrays(raw, ["_i", "_m"])
-    if route is not None:
+    arrays = _driver_route_arrays(raw, ["_i", "_m"])
+    if arrays is not None:
         from . import graph_np
 
         try:
             a, b = graph_np.shared_item_pairs_np(
-                route[0], route[1], min_shared=min_shared
+                arrays[0], arrays[1], min_shared=min_shared
             )
         except graph_np.NpOverflow:
             pass

@@ -9,11 +9,12 @@ arithmetic — the sf0.1 purchase graph (~1.2 M edges, ~16 K nodes)
 spends ~4–6 s per query on ~25 sub-second jobs whose actual integer
 work is milliseconds. The same size-aware routing precedent as
 ``pagerank_py`` (|sources|-bounded affinity walks) and
-``bpe._fit_words_py`` (vocab-budget merge loop): ONE bounded count
-probe decides; at or under the budget the collected edge list runs
-the exact fixpoint vectorized in numpy int64 on the driver; past it
-the distributed loop is untouched — at 100 TB an edge table must
-never land on the driver.
+``bpe._fit_words_py`` (vocab-budget merge loop): ONE bounded collect
+decides (``operators.route``, budget ``route.budget("graph")``); at
+or under the budget the collected edge list runs the exact fixpoint
+vectorized in numpy int64 on the driver; past it the distributed
+loop is untouched — at 100 TB an edge table must never land on the
+driver.
 
 EXACTNESS CONTRACT (parity-pinned in ``tests/test_graph_np.py``):
 - node identity is the index into the np.unique universe; np.unique
@@ -34,24 +35,6 @@ EXACTNESS CONTRACT (parity-pinned in ``tests/test_graph_np.py``):
 
 from __future__ import annotations
 
-import os
-
-#: 8M edges ≈ 200 MB collected (3 × int64 columns) — comfortable in
-#: the default 8g driver with a wide margin; numpy iteration cost at
-#: this size is tens of milliseconds per round. Graphs past this are
-#: genuinely distributed-scale and take the cluster loop.
-DEFAULT_EDGE_BUDGET = 8_000_000
-
-
-def edge_budget() -> int:
-    """Driver-route threshold (edges). Env-tunable:
-    ``SPARK_GRAFT_GRAPH_DRIVER_EDGES`` (0 disables the route — the
-    tests' lever for A/B parity, and the honest setting for clusters
-    whose driver is memory-starved)."""
-    return int(
-        os.environ.get("SPARK_GRAFT_GRAPH_DRIVER_EDGES", str(DEFAULT_EDGE_BUDGET))
-    )
-
 
 class NpOverflow(Exception):
     """Certified int64 headroom is insufficient for this graph —
@@ -62,55 +45,6 @@ def _np():
     import numpy as np
 
     return np
-
-
-def collect_cols(df, names):
-    """Collect ``names`` columns via Arrow → list of numpy arrays.
-    Returns None when any column carries NULLs (the route refuses;
-    distributed semantics own that case)."""
-    return _cols_of(df.toArrow(), names)
-
-
-def collect_cols_bounded(df, names, budget: int):
-    """Probe-and-collect in ONE pass: a single plain parallel Arrow
-    collect, guarded two ways — rows over ``budget`` return None (the
-    caller takes the distributed path), and a collect whose serialized
-    results blow past ``spark.driver.maxResultSize`` (1g default) is
-    aborted BY SPARK and caught here, so a wildly over-budget input
-    costs one partial scan and never OOMs the driver.
-
-    Why not ``limit(budget+1)``: CollectLimit executes via
-    ``executeTake``'s incremental partition ramp (1, 4, 16, ...
-    partitions per job — ``spark.sql.limit.initialNumPartitions``),
-    which serializes what should be one fully parallel pass; measured
-    3.08 s vs 0.67 s for a 3.6M-edge union-of-joins lineage (r15,
-    median-of-3), i.e. the r14 bounded probe DOUBLED the routed path
-    over even the old count+collect shape (1.41 s). Raising the
-    initial-partition count would instead let every task ship up to
-    budget rows to the driver at once — unbounded driver memory at
-    scale. The maxResultSize guard keeps the one-pass collect
-    memory-safe without either cost. Row order is whatever the
-    collect returned — every routed fixpoint normalizes on the
-    arrays (np.unique / lexsort), so order never matters."""
-    try:
-        tbl = df.toArrow()
-    except Exception as exc:  # over-size abort → distributed path
-        if "maxResultSize" in str(exc) or "bigger than" in str(exc):
-            return None
-        raise
-    if tbl.num_rows > budget:
-        return None
-    return _cols_of(tbl, names)
-
-
-def _cols_of(tbl, names):
-    out = []
-    for n in names:
-        col = tbl.column(n)
-        if col.null_count:
-            return None
-        out.append(col.to_numpy(zero_copy_only=False))
-    return out
 
 
 def _index(np, *cols):

@@ -74,6 +74,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import route
+
 
 def _is_float(dt: T.DataType) -> bool:
     return isinstance(dt, (T.FloatType, T.DoubleType))
@@ -405,37 +407,21 @@ def kth_smallest_by(
             vals.unpersist(blocking=False)
 
 
-def _driver_rows_budget() -> int:
-    """Row threshold for the numpy driver route: at or under it the
-    whole (group, value[, weight]) projection collects via Arrow and
-    every requested rank resolves in ONE job (np.sort per group)
-    instead of the descent's stats/histogram/resolve job chain. The
-    probe is free — per-group row counts are already in the stats the
-    descent needs anyway. 4M rows ≈ 100 MB collected; past it (or for
-    exotic value types / NULL group keys) the bucketed descent runs
-    untouched — at 100 TB a corpus-sized value column must never land
-    on the driver. Env-tunable; 0 disables (the tests' A/B lever)."""
-    import os
-
-    return int(
-        os.environ.get("SPARK_GRAFT_ORDERSTATS_DRIVER_ROWS", "4000000")
-    )
-
-
-def _resolve_driver_np(vals, gcols, want, weighted):
+def _resolve_driver_np(vals, gcols, want, weighted, budget):
     """Exact per-group k-th smallest on the collected projection —
     bit-identical to the descent's resolution: unweighted rank k is
     the k-th value in ascending order (1-based); weighted rank k is
     the smallest value whose cumulative weight reaches k (weights
     summed per distinct value, so tie order is immaterial). Returns
     ``{group: {k: value}}`` with plain Python scalars, or None when
-    the route cannot certify exactness (numpy missing, NULL group
-    keys)."""
-    try:
-        import numpy as np
-    except ImportError:  # pragma: no cover
+    the route cannot certify exactness (NULL group keys) or the
+    collect is refused (``route.collect_bounded``)."""
+    import numpy as np
+
+    tbl = route.collect_bounded(vals, budget)
+    if tbl is None:
         return None
-    tbl = vals.toArrow().combine_chunks()
+    tbl = tbl.combine_chunks()
     for g in gcols:
         if tbl.column(g).null_count:
             return None  # NULL group keys: descent owns that grouping
@@ -595,13 +581,13 @@ def _descend(
             )
         out[g] = {}
         pending.extend((g, k, lo, hi, k, nrows, max_rows_exact) for k in ks)
-    # numpy driver route (guide §1.2 — same size-aware pattern as
-    # operators.graph_np): when the WHOLE projection fits the row
-    # budget, one Arrow collect + np.sort per group resolves every
-    # rank exactly, replacing the descent's job chain. The probe is
-    # free (row counts already in gstats); value types beyond
-    # int/float, NULL group keys, or an over-budget projection fall
-    # through to the descent unchanged.
+    # numpy driver route (guide §1.2, ``operators.route``): when the
+    # WHOLE projection fits the row budget, one Arrow collect +
+    # np.sort per group resolves every rank exactly, replacing the
+    # descent's job chain. The probe is free (row counts already in
+    # gstats); value types beyond int/float, NULL group keys, an
+    # over-budget projection or a maxResultSize abort fall through to
+    # the descent unchanged.
     if pending and isinstance(
         vtype,
         (
@@ -614,11 +600,12 @@ def _descend(
         ),
     ):
         total_rows = sum(nr for (_, _, _, nr) in gstats.values())
-        if 0 < total_rows <= _driver_rows_budget():
+        budget = route.budget("orderstats")
+        if 0 < total_rows <= budget:
             want: dict[tuple, list] = {}
             for g, k, _, _, _, _, _ in pending:
                 want.setdefault(g, []).append(k)
-            routed = _resolve_driver_np(vals, gcols, want, weighted)
+            routed = _resolve_driver_np(vals, gcols, want, weighted, budget)
             # completeness gate (r14 advisor): the routed dict's keys
             # come from Arrow to_pylist() while want's come from
             # collected Rows — representations can diverge (tz-aware

@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import intlin as IL
+from . import route
 
 _Q20 = 1 << IL.Q_COORD
 _Q35 = 1 << (IL.Q_COORD + IL.Q_VEC)
@@ -263,17 +264,10 @@ def _pca_prefilter_np(
     desc / neighbor asc), exact full-vector cosine rerank of exactly
     that shortlist, top-``k``. Same guards and fallback conditions as
     ``similarity._cosine_topk_np``."""
-    from .similarity import _ann_driver_rows, _fold_dot_rows, _fold_norms
-
-    budget = _ann_driver_rows()
-    if budget <= 0:
-        return None
-    try:
-        import numpy as np
-    except ImportError:  # pragma: no cover
-        return None
-    import pyarrow.compute as pc
+    import numpy as np
     from pyspark.sql import types as T
+
+    from .similarity import _fold_dot_rows, _fold_norms, _topk_matrix
 
     id_t = emb.schema[id_col].dataType
     if not isinstance(
@@ -287,38 +281,15 @@ def _pca_prefilter_np(
         F.array(*pca_project_cols(model, vec_col)).alias("_pc"),
         flag.alias("_isq"),
     )
-    try:
-        tbl = sel.toArrow()
-    except Exception as exc:  # over-size abort → distributed path
-        if "maxResultSize" in str(exc) or "bigger than" in str(exc):
-            return None
-        raise
-    if tbl.num_rows > budget or tbl.num_rows == 0:
+    tbl = route.collect_bounded(sel, route.budget("ann"))
+    if tbl is None or tbl.num_rows == 0:
         return None
-    for name in (id_col, vec_col, "_pc", "_isq"):
-        if tbl.column(name).null_count:
-            return None
-
-    def _mat(col):
-        flat = pc.list_flatten(col)
-        if flat.null_count:
-            return None
-        lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
-        if int(lens.min()) != int(lens.max()) or int(lens[0]) == 0:
-            return None
-        m = (
-            flat.to_numpy(zero_copy_only=False)
-            .astype(np.float64)
-            .reshape(tbl.num_rows, int(lens[0]))
-        )
-        return m if np.all(np.isfinite(m)) else None
-
-    X = _mat(tbl.column(vec_col))
-    P = _mat(tbl.column("_pc"))
-    if X is None or P is None:
+    plain = route.columns(tbl, [id_col, "_isq"])
+    X = _topk_matrix(np, tbl, vec_col)
+    P = _topk_matrix(np, tbl, "_pc")
+    if plain is None or X is None or P is None:
         return None
-    ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-    isq = tbl.column("_isq").to_numpy(zero_copy_only=False).astype(bool)
+    ids, isq = plain[0], plain[1].astype(bool)
     xn = _fold_norms(np, X)
     pn = _fold_norms(np, P)
     if (

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import route
 from .util import spread
 
 
@@ -67,6 +68,15 @@ def _fold_norms(np, X):
     return np.sqrt(acc)
 
 
+def _topk_matrix(np, tbl, name):
+    """``route.matrix`` plus the top-k routes' own refusals:
+    zero-length and non-finite vectors."""
+    m = route.matrix(tbl, name)
+    if m is None or m.shape[1] == 0 or not np.all(np.isfinite(m)):
+        return None
+    return m
+
+
 def _cosine_topk_np(
     emb: DataFrame,
     k: int,
@@ -87,14 +97,7 @@ def _cosine_topk_np(
     division semantics belong to the distributed plan), non-integral
     id columns, or an over-``max_query_rows`` query set (the
     distributed guard owns that error)."""
-    budget = _ann_driver_rows()
-    if budget <= 0:
-        return None
-    try:
-        import numpy as np
-    except ImportError:  # pragma: no cover
-        return None
-    import pyarrow.compute as pc
+    import numpy as np
     import pyarrow.types as pat
     from pyspark.sql import types as T
 
@@ -105,42 +108,23 @@ def _cosine_topk_np(
         return None
     cols = [id_col, vec_col] + ([cell_col] if cell_col else [])
     flag = query_pred if query_pred is not None else F.lit(True)
-    try:
-        tbl = emb.select(*cols, flag.alias("_isq")).toArrow()
-    except Exception as exc:  # over-size abort → distributed path
-        if "maxResultSize" in str(exc) or "bigger than" in str(exc):
-            return None
-        raise
-    if tbl.num_rows > budget or tbl.num_rows == 0:
-        return None
-    for name in cols + ["_isq"]:
-        if tbl.column(name).null_count:
-            return None
-    vec_a = tbl.column(vec_col)
-    flat = pc.list_flatten(vec_a)
-    if flat.null_count:
-        return None
-    lens = pc.list_value_length(vec_a).to_numpy(zero_copy_only=False)
-    if int(lens.min()) != int(lens.max()) or int(lens[0]) == 0:
-        return None
-    ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-    X = (
-        flat.to_numpy(zero_copy_only=False)
-        .astype(np.float64)
-        .reshape(len(ids), int(lens[0]))
+    tbl = route.collect_bounded(
+        emb.select(*cols, flag.alias("_isq")), route.budget("ann")
     )
-    if not np.all(np.isfinite(X)):
+    if tbl is None or tbl.num_rows == 0:
         return None
-    isq = tbl.column("_isq").to_numpy(zero_copy_only=False).astype(bool)
+    plain = route.columns(tbl, [id_col, "_isq"] + cols[2:])
+    X = _topk_matrix(np, tbl, vec_col)
+    if plain is None or X is None:
+        return None
+    ids, isq = plain[0], plain[1].astype(bool)
     if max_query_rows is not None and int(isq.sum()) > max_query_rows:
         return None  # the distributed guard raises the canonical error
     if cell_col:
-        cell_a = tbl.column(cell_col)
-        if not (
-            pat.is_integer(cell_a.type) or pat.is_string(cell_a.type)
-        ):
+        cell_t = tbl.column(cell_col).type
+        if not (pat.is_integer(cell_t) or pat.is_string(cell_t)):
             return None
-        cells = cell_a.to_numpy(zero_copy_only=False)
+        cells = plain[2]
     norms = _fold_norms(np, X)
     if not np.all(np.isfinite(norms)) or np.any(norms == 0.0):
         return None  # inf/NaN ordering belongs to the distributed plan
@@ -222,7 +206,7 @@ def cosine_topk(
     # bounded inputs route through the exact numpy twin (brute and
     # cell modes; multi-probe keeps the distributed plan): one Arrow
     # collect + the same IEEE fold arithmetic, under
-    # SPARK_GRAFT_ANN_DRIVER_ROWS like every ANN route here
+    # route.budget("ann") like every ANN route here
     if probe_cells is None:
         routed = _cosine_topk_np(
             emb, k, query_pred, id_col, vec_col, cell_col, max_query_rows
@@ -417,69 +401,27 @@ def _audit_q40_sum(rows, where: str) -> None:
             )
 
 
-def _ann_driver_rows() -> int:
-    """Row budget for the ANN driver routes (kmeans_fit /
-    kcenter_greedy): at or under it the (id, vector) projection
-    collects once via Arrow and the iteration loop runs vectorized on
-    the driver — replacing iters × (Arrow assign pass + mean collect)
-    jobs of fixed latency. 500k × 64-dim float64 ≈ 256 MB; past it
-    (or NULLs) the distributed loop is untouched. Env-tunable
-    ``SPARK_GRAFT_ANN_DRIVER_ROWS``; 0 disables (the tests' A/B
-    lever)."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_ANN_DRIVER_ROWS", "500000"))
-
-
 def _collect_id_vecs(emb: DataFrame, id_col: str, vec_col: str):
-    """Size-probed Arrow collect of (id, vector) → (ids int64 array,
-    vecs float64 matrix) sorted by id ascending, or None (over
-    budget / NULLs at any nesting level / ragged vectors / numpy
-    missing). Probe and collect are ONE pass (r14 advisor/verdict
-    item): a single plain parallel Arrow collect, bounded after the
-    fact by the row budget and by Spark's ``maxResultSize`` abort
-    (caught → fallback) — the former ``limit(budget+1)`` probe
-    serialized the collect through CollectLimit's incremental
-    partition ramp (see ``graph_np.collect_cols_bounded``).
-    Child-level NULLs (NaN under np.asarray — argmax-divergent from
-    the distributed null ordering) and ragged lengths fall back
-    instead of silently diverging or raising (r14 advisor item)."""
-    budget = _ann_driver_rows()
-    if budget <= 0:
-        return None
-    try:
-        import numpy as np
-    except ImportError:  # pragma: no cover
-        return None
-    import pyarrow.compute as pc
+    """Bounded Arrow collect of (id, vector) → (ids int64 array, vecs
+    float64 matrix) sorted by id ascending, or None (the refusals of
+    ``route.collect_bounded`` and ``route.matrix``: over the ``ann``
+    budget, a maxResultSize abort, NULLs at any nesting level, ragged
+    vectors; and an empty input, whose error paths the distributed
+    loops own). Unlike the top-k routes it accepts zero-length and
+    non-finite vectors."""
+    import numpy as np
 
-    try:
-        tbl = emb.select(id_col, vec_col).toArrow()
-    except Exception as exc:  # over-size abort → distributed path
-        if "maxResultSize" in str(exc) or "bigger than" in str(exc):
-            return None
-        raise
-    if tbl.num_rows > budget:
-        return None
-    if tbl.column(id_col).null_count or tbl.column(vec_col).null_count:
-        return None
-    ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-    if len(ids) == 0:
-        return None  # empty input: distributed error paths own it
-    vec_a = tbl.column(vec_col)
-    flat = pc.list_flatten(vec_a)
-    if flat.null_count:
-        return None  # NULL vector elements: distributed paths own them
-    lens = pc.list_value_length(vec_a).to_numpy(zero_copy_only=False)
-    if int(lens.min()) != int(lens.max()):
-        return None  # ragged vectors: fall back, don't raise
-    vecs = (
-        flat.to_numpy(zero_copy_only=False)
-        .astype(np.float64)
-        .reshape(len(ids), int(lens[0]))
+    tbl = route.collect_bounded(
+        emb.select(id_col, vec_col), route.budget("ann")
     )
-    order = np.argsort(ids, kind="stable")
-    return ids[order], vecs[order]
+    if tbl is None:
+        return None
+    plain = route.columns(tbl, [id_col])
+    vecs = route.matrix(tbl, vec_col)
+    if plain is None or vecs is None or len(plain[0]) == 0:
+        return None
+    order = np.argsort(plain[0], kind="stable")
+    return plain[0][order], vecs[order]
 
 
 def _np_assign_codes(vecs, cents, np):
@@ -573,11 +515,11 @@ def kmeans_fit(
     # same q40 means + audit — replacing iters × 2 jobs with one
     # collect. Past the budget the distributed loop below is
     # untouched.
-    route = _collect_id_vecs(emb, id_col, vec_col)
-    if route is not None:
+    arrays = _collect_id_vecs(emb, id_col, vec_col)
+    if arrays is not None:
         import numpy as np
 
-        ids_a, vecs_a = route
+        ids_a, vecs_a = arrays
         cents, codes = _kmeans_np(ids_a, vecs_a, k, iters, np)
         import pandas as pd
 
@@ -1558,11 +1500,11 @@ def kcenter_greedy(
     # collect replaces k × (materialize + TakeOrdered) jobs under the
     # row budget; ids sorted ascending so np.argmax's first-max ==
     # the distributed (desc _mind, asc _id) tie-break.
-    route = _collect_id_vecs(df, id_col, vec_col)
-    if route is not None:
+    arrays = _collect_id_vecs(df, id_col, vec_col)
+    if arrays is not None:
         import numpy as np
 
-        ids_a, vecs_a = route
+        ids_a, vecs_a = arrays
         q = np.floor(vecs_a * float(1 << scale_bits)).astype(np.int64)
         chosen = [(0, int(ids_a[0]), 0)]
         mind = ((q - q[0]) ** 2).sum(axis=1)

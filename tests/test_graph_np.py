@@ -196,9 +196,9 @@ def test_triangles_parity(spark):
 
 def test_budget_zero_disables_route(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "0")
-    from databridge_etl_tools_spark.operators import graph_np
+    from databridge_etl_tools_spark.operators import route
 
-    assert graph_np.edge_budget() == 0
+    assert route.budget("graph") == 0
     # over-budget graphs must take the distributed loop and still work
     monkeypatch.setenv("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "2")
     edges = spark.createDataFrame(
@@ -213,7 +213,7 @@ def test_bounded_collect_maxresultsize_falls_back(spark):
     driver.maxResultSize abort as an over-budget signal (return None
     → distributed path), not an error — that abort is the memory
     guard that replaced the CollectLimit probe (r15)."""
-    from databridge_etl_tools_spark.operators import graph_np
+    from databridge_etl_tools_spark.operators import route
 
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
 
@@ -227,12 +227,12 @@ def test_bounded_collect_maxresultsize_falls_back(spark):
                 "MiB) is bigger than spark.driver.maxResultSize"
             )
 
-    assert graph_np.collect_cols_bounded(_Boom(), ["src"], 10) is None
+    assert route.collect_bounded(_Boom(), 10) is None
     # a genuine over-budget row count still falls back post-collect
-    assert graph_np.collect_cols_bounded(df, ["src", "dst"], 0) is None
+    assert route.collect_bounded(df, 0) is None
     # and an in-budget collect routes
-    got = graph_np.collect_cols_bounded(df, ["src", "dst"], 10)
-    assert got is not None and list(got[0]) == [1]
+    got = route.collect_bounded(df, 10)
+    assert got is not None and got.column("src").to_pylist() == [1]
 
 
 def test_shared_item_pairs_parity(spark):

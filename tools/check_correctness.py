@@ -5,6 +5,11 @@ on DuckDB at the same scale factor, then compares row count, sorted
 column names, and an order-insensitive multiset of canonicalized rows.
 
 Usage:  python tools/check_correctness.py [--sf /root/testdata/sf0.01] [names...]
+
+``SPARK_GRAFT_BENCH_LANE=dist`` (the bench.py lane) zeroes every
+driver-route budget that is not set explicitly, so the routed
+operators run the distributed plans that execute at scale instead of
+their numpy twins.
 """
 
 from __future__ import annotations
@@ -13,6 +18,7 @@ import argparse
 import datetime as dt
 import decimal
 import math
+import os
 import sys
 import time
 from collections import Counter
@@ -96,6 +102,12 @@ def main() -> int:
     )
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
+
+    if os.environ.get("SPARK_GRAFT_BENCH_LANE") == "dist":
+        from databridge_etl_tools_spark.operators.route import BUDGETS
+
+        for env, _ in BUDGETS.values():
+            os.environ.setdefault(env, "0")
 
     import __spark_entry__ as ent
     from databridge_etl_tools_spark.session import get_session
