@@ -2,18 +2,32 @@
 the reference's three top entry points as single DataFrame lineages
 with the QA layer woven through.
 
-Transactionality (V8): the TableStore only flips its manifest pointer
-after a full successful write, so any failure leaves the previous
-version visible — the reference's commit-on-success / rollback-on-
-error context manager (postgres/postgres.py:113-149) without explicit
-rollback code.
+One scan per staged load: the staged CSV is read under its header's
+schema (parsed on the driver, no inference job), and the QA metrics
+that need the data — row counts, U+FFFD hits, publish's point and
+coordinate counts — ride on the job that writes, as one
+``DataFrame.observe`` Observation. Count parity compares those
+observed counts with parquet footer row counts (``TableStore.row_count``,
+no job), never with a re-count of the table.
+
+Transactionality (V8): ``TableStore.write_checked`` writes the new
+segment, checks the observed metrics, and only then flips the
+manifest — the create, the drift drop/recreate, the truncate or the
+append. V8 "validate before the destructive step" holds because
+nothing is committed until every check passes: a failure leaves the
+previous version (manifest, commit log, properties) exactly as it
+was, and the unreferenced segment for ``vacuum`` — the reference's
+commit-on-success / rollback-on-error context manager
+(postgres/postgres.py:113-149) without explicit rollback code. The
+checks that need no scan (V5 fields, the bounded V6 geometry sample)
+still run before the write.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -23,8 +37,13 @@ from ..functions.text import normalize_headers
 from ..operators import merge as M
 from ..qa import QAReport
 from ..schema import TableSchema
-from ..sources.csv_io import read_csv, write_csv
+from ..sources.csv_io import LATIN1, REPLACEMENT_CHAR, read_csv, replacement_flag, write_csv
 from ..sources.table_store import TableStore
+
+#: helper columns carried to the observed write, dropped before it:
+#: a staged row's U+FFFD flag, and (upsert) each kept key's staged
+#: row and U+FFFD counts
+_BAD, _N, _NBAD = "_qa_fffd", "_qa_rows", "_qa_fffd_rows"
 
 
 # ---------------------------------------------------------------------
@@ -93,6 +112,38 @@ def _synthesize_objectid(
     return out
 
 
+def _staged_reads(spark: SparkSession, csv_path: str):
+    """Yield ``(raw, retry)``: the staged CSV as an all-string frame
+    under its header's schema (no Spark job) with the per-row U+FFFD
+    flag ``_BAD``, read as UTF-8 and then as latin-1 — the reference's
+    whole-file retry (postgres/postgres.py:292-298). The caller writes
+    each frame with the flag's count observed and stops at the first
+    committed write; ``retry`` says a hit should discard the write and
+    move on. A header that does not decode as UTF-8 goes straight to
+    latin-1, so only a file with undecodable data is read twice."""
+    for encoding in ("utf-8", LATIN1):
+        raw = read_csv(spark, csv_path, encoding=encoding, fallback_encoding=None)
+        retry = encoding != LATIN1
+        if retry and REPLACEMENT_CHAR in "".join(raw.columns):
+            continue
+        yield raw.withColumn(_BAD, replacement_flag(raw)), retry
+
+
+def _staged_check(qa: QAReport, obs: Observation, retry: bool, rows: str, name: str):
+    """The check a staged write commits under: False (discard, redo as
+    latin-1) on observed U+FFFD hits while a retry is left, else V1 on
+    the observed row count (raises QAError when zero)."""
+
+    def check() -> bool:
+        m = obs.get
+        if retry and m["bad"]:
+            return False
+        qa.nonzero_count(m[rows] or 0, name)
+        return True
+
+    return check
+
+
 # ---------------------------------------------------------------------
 # load (§3.1)
 # ---------------------------------------------------------------------
@@ -121,43 +172,46 @@ def load_pipeline(
     post-hooks."""
     if mode not in ("truncate", "append", "rename_replace"):
         raise ValueError(f"unknown load mode: {mode!r}")
-    qa = QAReport()
-    raw = read_csv(spark, csv_path)
-    prepared = prepare_for_load(raw, schema, column_mapping, exclude_fields)
-
-    # ALL QA preconditions run against the DECLARED schema before any
-    # destructive step (drift drop/recreate, truncate) — a failing
-    # precheck must leave existing data untouched (V8 transactionality;
-    # the reference's validate-before-truncate ordering).
     declared_cols = [f.name for f in schema.struct.fields]
-    qa.schema_fields_match(prepared.columns, declared_cols)
-    for col, meta in schema.geometry_fields.items():
-        if col in prepared.columns:
-            qa.geometry_precheck(
-                prepared, col,
-                expected_kind=meta.get("geometry_type"),
-                expected_srid=meta.get("srid"),
-            )
-    n_in = qa.nonzero_count(prepared, "prepared_csv")
+    for raw, retry in _staged_reads(spark, csv_path):
+        qa = QAReport()
+        prepared = prepare_for_load(raw, schema, column_mapping, exclude_fields)
+        # the checks that need no full scan run before the write (a
+        # failing one must not even stage a segment); the V6 sample
+        # reads ``prepared``, which carries no Observation
+        qa.schema_fields_match([c for c in prepared.columns if c != _BAD], declared_cols)
+        for col, meta in schema.geometry_fields.items():
+            if col in prepared.columns:
+                qa.geometry_precheck(
+                    prepared, col,
+                    expected_kind=meta.get("geometry_type"),
+                    expected_srid=meta.get("srid"),
+                )
+        recreated = (mode != "append" or not store.exists(table)) and store.needs_create(table, schema)
+        target_cols = declared_cols if recreated else store.read(table).columns
+        before = 0 if mode != "append" or recreated else store.row_count(table)
 
-    recreated = store.create_table(table, schema) if mode in ("truncate", "rename_replace") or not store.exists(table) else False
-    target_cols = [f.name for f in store.read(table).schema.fields]
+        # the reference's DB auto-generates objectid (SDE-managed); when
+        # the target has one and the CSV doesn't, synthesize it rather
+        # than silently dropping the column / breaking the append union
+        if "objectid" in target_cols and "objectid" not in prepared.columns:
+            prepared = _synthesize_objectid(prepared, schema, store, table, mode)
+        obs = Observation()
+        ordered = (
+            prepared.select(*[c for c in target_cols if c in prepared.columns], _BAD)
+            .observe(obs, F.count(F.lit(1)).alias("rows"), F.count_if(_BAD).alias("bad"))
+            .drop(_BAD)
+        )
+        check = _staged_check(qa, obs, retry, "rows", "prepared_csv")
+        if store.write_checked(
+            table, ordered, check,
+            append=mode == "append",
+            create=schema if recreated else None,
+        ):
+            break
 
-    # the reference's DB auto-generates objectid (SDE-managed); when
-    # the target has one and the CSV doesn't, synthesize it rather
-    # than silently dropping the column / breaking the append union
-    if "objectid" in target_cols and "objectid" not in prepared.columns:
-        prepared = _synthesize_objectid(prepared, schema, store, table, mode)
-    ordered = prepared.select(*[c for c in target_cols if c in prepared.columns])
-    if mode in ("truncate", "rename_replace"):
-        before = 0
-        store.overwrite(table, ordered)
-    else:
-        before = store.read(table).count()
-        store.append(table, ordered)
-
-    after = store.read(table).count()
-    qa.count_parity(before + n_in, after, name=f"{mode} load")
+    n_in = obs.get["rows"]
+    qa.count_parity(before + n_in, store.row_count(table), name=f"{mode} load")
     qa.smoke_select(store.read(table), table)
 
     for cols in indexes or []:
@@ -205,21 +259,22 @@ def extract_pipeline(
     localize_timestamps: bool = True,
 ) -> ExtractResult:
     """Table → CSV + JSON schema extract (§3.2): count asserts before
-    and after the write (guards concurrent writers), Eastern
-    localization of naive timestamps, exclusion drops, schema JSON
-    sidecar (the extract-json-schema command)."""
+    and after the write (the footer row count of the state read,
+    against the rows the write observed), Eastern localization of
+    naive timestamps, exclusion drops, schema JSON sidecar (the
+    extract-json-schema command)."""
     qa = QAReport()
     df = store.read(table)
-    n_before = qa.nonzero_count(df, table)
+    n_before = qa.nonzero_count(store.row_count(table), table)
     if localize_timestamps:
         for f in df.schema.fields:
             if isinstance(f.dataType, T.TimestampNTZType):
                 df = df.withColumn(f.name, eastern_offset_rendered(f.name))
     if exclude_fields:
         df = df.drop(*exclude_fields)
-    write_csv(df, out_csv)
-    n_after = store.read(table).count()
-    qa.count_parity(n_before, n_after, name="post-extract recount")
+    obs = Observation()
+    write_csv(df.observe(obs, F.count(F.lit(1)).alias("rows")), out_csv)
+    qa.count_parity(n_before, obs.get["rows"], name="post-extract recount")
 
     props = store.properties(table)
     geo_props = props.get("geometry", {})
@@ -270,8 +325,9 @@ def publish_opendata(
     from ..functions import geoproj as GP
 
     qa = QAReport()
+    qa.nonzero_count(store.row_count(table), table)
     df = store.read(table)
-    qa.nonzero_count(df, table)
+    obs = None
     if geom_col in df.columns:
         srid = G.remap_bad_srid(G.srid_of(geom_col))
         if default_srid is not None:
@@ -292,25 +348,34 @@ def publish_opendata(
             .when(srid == 2272, lcc_lat)
             .when(srid == 3857, merc_lat)
         )
-        df = df.withColumns({"lng": lng, "lat": lat}).drop(
-            geom_col, "_pub_x", "_pub_y", "_pub_srid"
+        # visibility (not fatality): source points and the coordinates
+        # they published, counted by the CSV write itself — a point
+        # whose SRID is unsupported publishes NULLs
+        obs = Observation()
+        df = (
+            df.withColumns({"lng": lng, "lat": lat})
+            .observe(
+                obs,
+                F.count_if(F.col(geom_col).rlike(r"POINT\s*\(")).alias("points"),
+                F.count_if(F.col("lng").isNotNull()).alias("published"),
+            )
+            .drop(geom_col, "_pub_x", "_pub_y", "_pub_srid")
         )
     if exclude_fields:
         df = df.drop(*exclude_fields)
     write_csv(df, out_dir)
-    # K6 gzip artifact: re-encode from the already-written CSV so the
-    # reproject lineage runs once, not per artifact
-    published = spark.read.options(header=True).csv(out_dir)
+    # K6 gzip artifact: re-encode from the already-written CSV, read
+    # under the schema it was written with, so the reproject lineage
+    # runs once, not per artifact, and no header inference runs
+    written = T.StructType([T.StructField(c, T.StringType()) for c in df.columns])
+    published = spark.read.options(header=True).schema(written).csv(out_dir)
     write_csv(published, out_dir + "_gz", gzip=True)
-    src = store.read(table)
-    if geom_col in src.columns:
-        # visibility (not fatality): rows with point coordinates that
-        # failed to publish (unsupported SRID) are counted
-        n_geom = src.where(F.col(geom_col).rlike(r"POINT\s*\(")).count()
-        n_coords = published.where(F.col("lng").isNotNull()).count()
+    if obs is not None:
+        m = obs.get
         qa.metric(
             "published_coordinates",
-            f"points={n_geom} published={n_coords} unsupported_srid={n_geom - n_coords}",
+            f"points={m['points']} published={m['published']} "
+            f"unsupported_srid={m['points'] - m['published']}",
         )
     qa.smoke_select(published, "published")
     return qa.raise_if_failed()
@@ -343,60 +408,90 @@ def upsert_pipeline(
     optionally delete rows missing from staging."""
     if not schema.primary_key:
         raise ValueError("upsert requires a primaryKey in the schema")
-    qa = QAReport()
-    raw = read_csv(spark, csv_path)
-    staging = prepare_for_load(raw, schema, column_mapping)
-    n_staged = qa.nonzero_count(staging, "staging")
-    prod = store.read(table)
-    if (
-        "objectid" in prod.columns
-        and "objectid" not in staging.columns
-        and "objectid" not in schema.primary_key
-    ):
-        # AGO oid-swap semantics (ago/ago.py:830-838): matched keys
-        # keep their existing objectid; new keys continue the counter.
-        # New ids are densely numbered per partition (util.dense_ids —
-        # no single-partition sort); matched rows then override with
-        # their existing oid, so fresh ids may have gaps where keys
-        # matched (the counter only ever moves forward — same behavior
-        # as a DB sequence under conflicting inserts).
-        from ..operators.util import dense_ids
+    keys = list(schema.primary_key)
+    for raw, retry in _staged_reads(spark, csv_path):
+        qa = QAReport()
+        staging = prepare_for_load(raw, schema, column_mapping)
+        prod = store.read(table)
+        if (
+            "objectid" in prod.columns
+            and "objectid" not in staging.columns
+            and "objectid" not in keys
+        ):
+            # AGO oid-swap semantics (ago/ago.py:830-838): matched keys
+            # keep their existing objectid; new keys continue the counter.
+            # New ids are densely numbered per partition (util.dense_ids —
+            # no single-partition sort); matched rows then override with
+            # their existing oid, so fresh ids may have gaps where keys
+            # matched (the counter only ever moves forward — same behavior
+            # as a DB sequence under conflicting inserts).
+            from ..operators.util import dense_ids
 
-        keymap = prod.select(*schema.primary_key, F.col("objectid").alias("_oid"))
-        staging = staging.join(keymap, list(schema.primary_key), "left")
-        base = int(prod.agg(F.max("objectid").alias("m")).first()["m"] or 0)
-        oid_type = next(
-            (f.dataType for f in prod.schema.fields if f.name == "objectid"), None
+            keymap = prod.select(*keys, F.col("objectid").alias("_oid"))
+            staging = staging.join(keymap, keys, "left")
+            base = int(prod.agg(F.max("objectid").alias("m")).first()["m"] or 0)
+            oid_type = next(
+                (f.dataType for f in prod.schema.fields if f.name == "objectid"), None
+            )
+            staging = dense_ids(
+                staging.localCheckpoint(eager=False), base=base, id_col="_fresh"
+            )
+            staging = staging.withColumn(
+                "objectid", F.coalesce(F.col("_oid"), F.col("_fresh").cast(oid_type))
+            ).drop("_oid", "_fresh")
+        missing = set(prod.columns) - set(staging.columns)
+        if missing:
+            # fail with a V5-style message instead of an unresolved-column
+            # AnalysisException deep inside the merge plan
+            qa.schema_fields_match([c for c in staging.columns if c != _BAD], prod.columns)
+            qa.raise_if_failed()
+        cols = [c for c in prod.columns if c in staging.columns]
+        # deterministic winner among duplicate-PK staging rows: total
+        # order over the non-key column values (identical duplicates tie
+        # harmlessly; differing ones always resolve the same way). The
+        # one dedupe also counts each key's staged rows and U+FFFD hits,
+        # so the metrics observed on the merged write count every staged
+        # row once, however many branches of the merge read the keys.
+        tiebreak = [F.col(c) for c in cols if c not in keys] or [F.lit(1)]
+        by_key = Window.partitionBy(*keys)
+        staged = M.dedupe_by_key(
+            staging.select(
+                *cols,
+                F.count(F.lit(1)).over(by_key).alias(_N),
+                F.sum(F.col(_BAD).cast("long")).over(by_key).alias(_NBAD),
+            ),
+            keys,
+            tiebreak,
         )
-        staging = dense_ids(
-            staging.localCheckpoint(eager=False), base=base, id_col="_fresh"
-        )
-        staging = staging.withColumn(
-            "objectid", F.coalesce(F.col("_oid"), F.col("_fresh").cast(oid_type))
-        ).drop("_oid", "_fresh")
-    missing = set(prod.columns) - set(staging.columns)
-    if missing:
-        # fail with a V5-style message instead of an unresolved-column
-        # AnalysisException deep inside the merge plan
-        qa.schema_fields_match(staging.columns, prod.columns)
-        qa.raise_if_failed()
-    staging = staging.select(*[c for c in prod.columns if c in staging.columns])
-    # deterministic winner among duplicate-PK staging rows: total
-    # order over the non-key column values (identical duplicates tie
-    # harmlessly; differing ones always resolve the same way)
-    tiebreak = [
-        F.col(c) for c in staging.columns if c not in schema.primary_key
-    ] or [F.lit(1)]
-    merged = M.upsert(prod, staging, schema.primary_key, staging_order=tiebreak)
+        if delete_stale_rows:
+            # upsert-then-delete-stale keeps exactly the staged keys, so
+            # its result IS the de-duplicated staging: every table row is
+            # either replaced by its staged row or stale. A row whose key
+            # has a NULL matches no key and drops out (below, after the
+            # metrics have counted it). No table row is read.
+            merged = staged
+        else:
+            untagged = prod.withColumns({_N: F.lit(0).cast("long"), _NBAD: F.lit(0).cast("long")})
+            merged = M.upsert(untagged, staged, keys)
+        obs = Observation()
+        merged = merged.observe(
+            obs,
+            F.sum(_N).alias("staged"),
+            F.sum(_NBAD).alias("bad"),
+            F.count_if(F.col(_N) > 0).alias("keys"),
+        ).drop(_N, _NBAD)
+        if delete_stale_rows:
+            merged = merged.dropna(subset=keys)
+        if store.write_checked(table, merged, _staged_check(qa, obs, retry, "staged", "staging")):
+            break
+
+    m = obs.get
+    final = store.row_count(table)
     if delete_stale_rows:
-        merged = M.delete_stale(merged, staging, schema.primary_key)
-    store.overwrite(table, merged)
-    final = store.read(table).count()
-    if delete_stale_rows:
-        qa.count_parity(staging.select(*schema.primary_key).distinct().count(), final, "stale-deleted")
+        qa.count_parity(m["keys"], final, "stale-deleted")
     qa.smoke_select(store.read(table), table)
     qa.raise_if_failed()
-    return UpsertResult(staged=n_staged, final_count=final, qa=qa)
+    return UpsertResult(staged=m["staged"], final_count=final, qa=qa)
 
 
 # ---------------------------------------------------------------------

@@ -54,8 +54,13 @@ class QAReport:
         return self
 
     # -- V1: nonzero source count -------------------------------------
-    def nonzero_count(self, df: DataFrame, name: str = "source", precondition: bool = True) -> int:
-        n = df.count()
+    def nonzero_count(
+        self, source: "DataFrame | int", name: str = "source", precondition: bool = True
+    ) -> int:
+        """V1 on a frame (counted here: a Spark job) or on a row count
+        already known — observed on a write, or read from parquet
+        footers — which costs nothing. Returns the count."""
+        n = source if isinstance(source, int) else source.count()
         self._add(f"V1 nonzero[{name}]", n > 0, f"count={n}", precondition)
         return n
 
@@ -106,7 +111,13 @@ class QAReport:
         """Bounded-sample EWKT validation before truncate/overwrite
         (ago/ago.py:542-583: ≤500 rows, type must match the target
         layer). Accepts the MULTI form of the expected kind and
-        EMPTY geometries."""
+        EMPTY geometries.
+
+        Runs one bounded collect on ``df``, which must be the
+        unobserved lineage: a ``limit`` action on a frame that carries
+        a ``DataFrame.observe`` node would complete that Observation
+        with the metrics of the rows it sampled, not of the whole
+        write."""
         c = F.col(geom_col)
         n_open = F.length(c) - F.length(F.replace(c, F.lit("("), F.lit("")))
         n_close = F.length(c) - F.length(F.replace(c, F.lit(")"), F.lit("")))

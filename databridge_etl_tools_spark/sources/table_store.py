@@ -29,6 +29,7 @@ import os
 import shutil
 import time
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -58,6 +59,14 @@ def _nullable(dt: T.DataType) -> T.DataType:
     if isinstance(dt, T.MapType):
         return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
     return dt
+
+
+def _create_args(schema: "TableSchema | T.StructType") -> "tuple[T.StructType, dict]":
+    """Struct and table properties a create commits: a TableSchema
+    carries its primary key and geometry facts."""
+    if isinstance(schema, TableSchema):
+        return schema.struct, {"primaryKey": schema.primary_key, "geometry": schema.geometry_fields}
+    return schema, {}
 
 
 def _check_commit(op: str, table: str, commit: int, n: int) -> int:
@@ -184,22 +193,23 @@ class TableStore:
         the live schema drifted, drop + recreate (the reference's
         policy, postgres/postgres.py:454-488). Returns True when a
         (re)create happened."""
-        struct = schema.struct if isinstance(schema, TableSchema) else schema
-        props = {}
-        if isinstance(schema, TableSchema):
-            props = {
-                "primaryKey": schema.primary_key,
-                "geometry": schema.geometry_fields,
-            }
+        if not self.needs_create(table, schema):
+            return False
+        struct, props = _create_args(schema)
         if self.exists(table):
-            drift = schema_drift(struct, self._schema(table))
-            if not drift:
-                return False
             if not recreate_on_drift:
-                raise ValueError(f"schema drift on {table}: {drift}")
+                raise ValueError(f"schema drift on {table}: {schema_drift(struct, self._schema(table))}")
             self.drop(table)
         self._flip(table, [], props, struct)  # empty: no data segment
         return True
+
+    def needs_create(self, table: str, schema: TableSchema | T.StructType) -> bool:
+        """True when :meth:`create_table` would (re)create ``table``:
+        it is missing, or its live schema drifted from ``schema``.
+        Reads the recorded schema only — no job, no commit."""
+        return not self.exists(table) or bool(
+            schema_drift(_create_args(schema)[0], self._schema(table))
+        )
 
     def drop(self, table: str, if_exists: bool = True) -> None:
         """D3: drop table (log-or-error policy, postgres.py:921-946)."""
@@ -244,7 +254,17 @@ class TableStore:
         mergeSchema contract): new columns append with the delta,
         old segments read them as NULL. Dropping or retyping columns
         stays a drift-recreate (D1) — never silent."""
-        schema = self._schema(table)  # schema check against live state
+        delta, evolved = self._append_delta(table, df, evolve)
+        v = self._write_version(table, delta)
+        self._flip(table, self._segments(table) + [v], schema=evolved)
+
+    def _append_delta(
+        self, table: str, df: DataFrame, evolve: bool
+    ) -> "tuple[DataFrame, T.StructType]":
+        """``df`` in the live column order (additive columns last) and
+        the schema the append commits; raises before any write when
+        ``df`` lacks a live column, or adds one without ``evolve``."""
+        schema = self._schema(table)
         cols = schema.fieldNames()
         missing = set(cols) - set(df.columns)
         if missing:
@@ -255,9 +275,82 @@ class TableStore:
                 f"append to {table} adds columns {extra}; pass evolve=True "
                 f"for additive schema evolution"
             )
-        v = self._write_version(table, df.select(*cols, *extra))
         evolved = T.StructType(schema.fields + [df.schema[c] for c in extra])
-        self._flip(table, self._segments(table) + [v], schema=evolved)
+        return df.select(*cols, *extra), evolved
+
+    def write_checked(
+        self,
+        table: str,
+        df: DataFrame,
+        check: "Callable[[], bool]",
+        *,
+        append: bool = False,
+        create: "TableSchema | T.StructType | None" = None,
+    ) -> bool:
+        """Write ``df`` as a new segment, run ``check``, and commit only
+        if it passes — the entry point for loads whose QA reads metrics
+        observed on this very write (``DataFrame.observe``), so the
+        data is scanned once. Nothing is committed before ``check``
+        passes, so a failed check leaves the table as it was (V8).
+
+        - ``check()`` returns True: one manifest flip commits the
+          segment. With ``create`` the table is (re)created with that
+          schema in the same flip (D1: a drifted table is dropped, all
+          but the new segment, and its commit log restarts); else with
+          ``append`` the segment joins the live list; else it replaces
+          the state. Returns True.
+        - ``check()`` returns False: the segment is deleted and nothing
+          is committed; the caller redoes the write. Returns False.
+        - ``check()`` raises: nothing is committed — manifest, commit
+          log and properties stay byte-identical — and the unreferenced
+          segment is left for :meth:`vacuum` (deleted instead when the
+          table does not exist, as there is nothing to vacuum)."""
+        existed = self.exists(table)
+        schema = df.schema
+        if append and create is None:
+            df, schema = self._append_delta(table, df, evolve=False)
+        v = self._write_version(table, df)
+        try:
+            ok = check()
+        except BaseException:
+            if not existed:
+                self._discard(table, v)
+            raise
+        if not ok:
+            self._discard(table, v)
+            return False
+        if create is not None:
+            props = _create_args(create)[1]
+            if existed:
+                self._clear(table, keep=v)
+            self._flip(table, v, props, schema)
+        elif append:
+            self._flip(table, self._segments(table) + [v], schema=schema)
+        else:
+            self._flip(table, v, None, schema)
+        return True
+
+    def _discard(self, table: str, version: str) -> None:
+        """Delete an uncommitted segment, and the table directory when
+        that leaves it empty (a table that never committed)."""
+        shutil.rmtree(os.path.join(self._dir(table), version))
+        try:
+            os.rmdir(self._dir(table))
+        except OSError:
+            pass
+
+    def _clear(self, table: str, keep: str) -> None:
+        """:meth:`drop` that keeps one (uncommitted) segment: the
+        manifest goes first, so readers see the table absent, never
+        half-deleted."""
+        os.remove(self._manifest(table))
+        for entry in os.listdir(self._dir(table)):
+            if entry != keep:
+                path = os.path.join(self._dir(table), entry)
+                if os.path.isdir(path):
+                    shutil.rmtree(path)
+                else:
+                    os.remove(path)
 
     def read(self, table: str) -> DataFrame:
         """The current state, planned from the recorded schema: no
@@ -401,7 +494,7 @@ class TableStore:
     def analyze(self, table: str) -> dict:
         """D9 VACUUM ANALYZE analogue: recompute row count stats, from
         parquet footers on the driver (no Spark job)."""
-        n = self._table_rows(table)
+        n = self.row_count(table)
         self.set_properties(table, rowcount=n)
         return {"rowcount": n}
 
@@ -644,11 +737,12 @@ class TableStore:
         NULL."""
         return self._scan(table, segs, self._schema(table))
 
-    def _table_rows(self, table: str) -> int:
+    def row_count(self, table: str) -> int:
         """Row count of the current table state from parquet footer
         metadata, driver-side — no Spark job. Drives the adaptive
-        bloom threshold below; a streaming sink calls it every
-        micro-batch, so it must stay a metadata read."""
+        bloom threshold below and the pipelines' count parity; a
+        streaming sink calls it every micro-batch, so it must stay a
+        metadata read."""
         import pyarrow.parquet as pq
 
         base = self._dir(table)
@@ -891,7 +985,7 @@ class TableStore:
                 batch = _resolve_unique(batch)
             return self.commit_epoch(table, batch, epoch_id, scope=scope)
 
-        if self._table_rows(table) < self.BLOOM_MIN_ROWS:
+        if self.row_count(table) < self.BLOOM_MIN_ROWS:
             # small ledger: the classic full-ledger probes (one
             # changed-row probe + one anti-join) cost less than the
             # bloom machinery; segments stay bloom-less until the

@@ -6,9 +6,11 @@ Z-coords), extract it, load it back, assert recorddiff is empty."""
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
+from test_schema_store import _jobs_started
 
 from databridge_etl_tools_spark.functions import geoproj as GP
 from databridge_etl_tools_spark.plans import pipelines as P
@@ -365,3 +367,143 @@ def test_dense_ids_no_global_sort(spark):
     ids = sorted(r.objectid for r in out.collect())
     assert ids == list(range(101, 1101))  # dense, continuous, offset by base
     assert out.rdd.getNumPartitions() == 8
+
+
+# ---------------------------------------------------------------------
+# V8 under write-then-check-then-commit: the QA metrics are observed on
+# the segment write, and nothing is committed until they pass
+# ---------------------------------------------------------------------
+
+HEADER = "objectid,textfield,datefield,numericfield,shape\n"
+DRIFTED = TableSchema.from_json(
+    {
+        "primaryKey": ["objectid"],
+        "fields": [
+            {"name": "objectid", "type": "integer", "constraints": {"required": True}},
+            {"name": "extra", "type": "string"},
+            {"name": "shape", "type": "geometry", "geometry_type": "point", "srid": 2272},
+        ],
+    }
+)
+
+
+def _table_files(store, table):
+    """Bytes of the manifest and the commit log."""
+    base = os.path.join(store.root, table)
+    return {n: open(os.path.join(base, n), "rb").read() for n in ("MANIFEST.json", "_commits.jsonl")}
+
+
+def _version_dirs(store, table):
+    return sorted(e for e in os.listdir(os.path.join(store.root, table)) if e.startswith("v-"))
+
+
+def test_header_only_load_fails_v1_and_commits_nothing(spark, tmp_path, staged_csv):
+    store = TableStore(spark, str(tmp_path / "wh"))
+    P.load_pipeline(spark, staged_csv, SCHEMA, store, "pt", mode="truncate")
+    before, live = _table_files(store, "pt"), store._segments("pt")
+    empty = tmp_path / "header_only.csv"
+    empty.write_text(HEADER)
+    for mode in ("truncate", "append"):
+        with pytest.raises(QAError) as ei:
+            P.load_pipeline(spark, str(empty), SCHEMA, store, "pt", mode=mode)
+        assert "V1" in str(ei.value)
+        assert _table_files(store, "pt") == before
+    assert store.read("pt").count() == 5
+    # the checked-and-refused segments are written, never referenced
+    orphans = [v for v in _version_dirs(store, "pt") if v not in live]
+    assert len(orphans) == 2
+    assert sorted(store.vacuum("pt")) == orphans
+    assert _version_dirs(store, "pt") == live
+
+
+def test_failed_drift_recreate_keeps_old_table(spark, tmp_path, staged_csv):
+    store = TableStore(spark, str(tmp_path / "wh"))
+    P.load_pipeline(spark, staged_csv, SCHEMA, store, "pt", mode="truncate", indexes=[["objectid"]])
+    before, props = _table_files(store, "pt"), store.properties("pt")
+    empty = tmp_path / "drifted_header_only.csv"
+    empty.write_text("objectid,extra,shape\n")
+    with pytest.raises(QAError) as ei:
+        P.load_pipeline(spark, str(empty), DRIFTED, store, "pt", mode="rename_replace")
+    assert "V1" in str(ei.value)
+    assert _table_files(store, "pt") == before
+    assert store.properties("pt") == props and props["indexes"]
+    out = store.read("pt")
+    assert out.columns == ["objectid", "textfield", "datefield", "numericfield", "shape"]
+    assert out.count() == 5
+
+
+def test_failed_load_into_missing_table_leaves_it_absent(spark, tmp_path):
+    store = TableStore(spark, str(tmp_path / "wh"))
+    empty = tmp_path / "header_only.csv"
+    empty.write_text(HEADER)
+    with pytest.raises(QAError):
+        P.load_pipeline(spark, str(empty), SCHEMA, store, "pt_new", mode="append")
+    assert not store.exists("pt_new")
+    assert not os.path.exists(os.path.join(store.root, "pt_new"))
+
+
+LATIN1_ROW = b"7,caf\xe9,2020-01-01 00:00:00,1,SRID=2272;POINT(1 1)\n"
+
+
+def test_latin1_load_commits_one_segment(spark, tmp_path):
+    p = tmp_path / "latin.csv"
+    p.write_bytes(HEADER.encode() + LATIN1_ROW)
+    store = TableStore(spark, str(tmp_path / "wh"))
+    res = P.load_pipeline(spark, str(p), SCHEMA, store, "pt", mode="truncate")
+    assert res.rows_loaded == 1 and res.recreated
+    assert [r.textfield for r in store.read("pt").collect()] == ["café"]
+    # the UTF-8 attempt's segment was discarded, not left behind
+    assert _version_dirs(store, "pt") == store._segments("pt")
+    assert len(store._segments("pt")) == 1
+
+
+def test_latin1_upsert_commits_one_segment(spark, tmp_path, staged_csv):
+    store = TableStore(spark, str(tmp_path / "wh"))
+    P.load_pipeline(spark, staged_csv, SCHEMA, store, "pt", mode="truncate")
+    old = store._segments("pt")
+    p = tmp_path / "latin_delta.csv"
+    p.write_bytes(HEADER.encode() + LATIN1_ROW)
+    res = P.upsert_pipeline(spark, str(p), SCHEMA, store, "pt")
+    assert res.staged == 1 and res.final_count == 6
+    assert {r.objectid: r.textfield for r in store.read("pt").collect()}[7] == "café"
+    new = store._segments("pt")
+    assert len(new) == 1 and new[0] not in old
+    assert _version_dirs(store, "pt") == sorted(old + new)
+
+
+def test_upsert_staged_counts_duplicate_keys_once(spark, tmp_path, staged_csv):
+    """Duplicate staged keys feed the merge and the stale-row delete;
+    the observed counts still count each staged row exactly once."""
+    store = TableStore(spark, str(tmp_path / "wh"))
+    P.load_pipeline(spark, staged_csv, SCHEMA, store, "pt", mode="truncate")
+    delta = tmp_path / "dups.csv"
+    delta.write_text(
+        HEADER
+        + "2,first,2021-01-01 00:00:00,1,SRID=2272;POINT(1 1)\n"
+        + "2,second,2021-01-01 00:00:00,1,SRID=2272;POINT(1 1)\n"
+        + "3,x,2021-01-01 00:00:00,1,SRID=2272;POINT(1 1)\n"
+        + "2,first,2021-01-01 00:00:00,1,SRID=2272;POINT(1 1)\n"
+    )
+    for stale in (True, False):
+        res = P.upsert_pipeline(spark, str(delta), SCHEMA, store, "pt", delete_stale_rows=stale)
+        assert res.staged == 4
+        assert not res.qa.failures
+    assert res.final_count == 2
+    assert {r.objectid: r.textfield for r in store.read("pt").collect()} == {2: "first", 3: "x"}
+
+
+def test_staged_pipelines_scan_input_once(spark, tmp_path, staged_csv):
+    """Job-count guard: the QA metrics ride on the write, so each span
+    is its write plus the bounded V6 sample and the V7 smoke select."""
+    store = TableStore(spark, str(tmp_path / "wh"))
+    steps = [
+        ("load", 3, lambda: P.load_pipeline(spark, staged_csv, SCHEMA, store, "pt", mode="truncate")),
+        ("append", 3, lambda: P.load_pipeline(spark, staged_csv, SCHEMA, store, "pt", mode="append")),
+        ("upsert", 4, lambda: P.upsert_pipeline(spark, staged_csv, SCHEMA, store, "pt", delete_stale_rows=True)),
+        ("extract", 1, lambda: P.extract_pipeline(spark, store, "pt", str(tmp_path / "x"), localize_timestamps=False)),
+        ("publish", 3, lambda: P.publish_opendata(spark, store, "pt", str(tmp_path / "pub"))),
+    ]
+    for name, most, fn in steps:
+        with _jobs_started(spark) as jobs:
+            fn()
+        assert len(jobs) <= most, f"{name} ran {len(jobs)} Spark jobs, at most {most} expected"
