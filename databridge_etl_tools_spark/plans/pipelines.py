@@ -532,10 +532,11 @@ def incremental_dedup_pipeline(
     detected by the store's scoped epoch watermark and skipped before
     any write, so signatures are never double-inserted; epochs from a
     DIFFERENT checkpoint/run identity are never mistaken for replays
-    (pass ``epoch_scope=checkpoint_identity(ckpt)`` from streaming). (The replay's SCREEN runs
-    against the current store — which already holds the batch's own
-    signatures, so its counts read all-duplicate; idempotence lives
-    at the commit, exactly as in Delta's txnVersion recipe.)
+    (streaming passes the scope ``streaming.events.drain_fenced``
+    derives). (The replay's SCREEN runs against the current store —
+    which already holds the batch's own signatures, so its counts
+    read all-duplicate; idempotence lives at the commit, exactly as
+    in Delta's txnVersion recipe.)
 
     State stays bounded: k int64 + one id per KEPT document — the
     store grows with the deduplicated corpus, never with the raw

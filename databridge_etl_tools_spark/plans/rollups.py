@@ -65,14 +65,21 @@ def refresh_rollups(
     event row is fed in exactly one batch), then upserted; untouched
     buckets never move.
 
-    ``epoch_id`` (streaming ``foreachBatch``) makes the hourly fold
-    exactly-once under epoch replay: the fold commits via
+    ``epoch_id`` (a streaming micro-batch) makes the cascade
+    exactly-once under epoch replay: both levels commit via
     ``commit_epoch`` (epoch + data in one atomic flip), so a replayed
-    micro-batch is detected and skipped instead of double-counted.
-    The daily level is then RE-DERIVED from hourly state for the
-    touched days — a replay re-derives identical values (idempotent),
-    which is what makes the two-table cascade safe without a
-    multi-table transaction."""
+    fold is detected and skipped instead of double-counted. The daily
+    level is RE-DERIVED from hourly state for the touched days, so a
+    replay whose hourly fold already committed re-derives identical
+    daily values — which is what makes a crash between the two
+    commits safe without a multi-table transaction."""
+
+    def commit(table: str, df: DataFrame) -> None:
+        if epoch_id is None:
+            store.overwrite(table, df)
+        else:
+            store.commit_epoch(table, df, epoch_id, scope=epoch_scope)
+
     hourly_delta = _aggregate(batch, "HOUR")
 
     if store.exists(HOURLY):
@@ -88,10 +95,7 @@ def refresh_rollups(
         new_hourly = M.upsert(prev, combined, _KEYS)
     else:
         new_hourly = hourly_delta
-    if epoch_id is None:
-        store.overwrite(HOURLY, new_hourly)
-    else:
-        store.commit_epoch(HOURLY, new_hourly, epoch_id, scope=epoch_scope)
+    commit(HOURLY, new_hourly)
 
     # daily level derives from hourly (never from raw events)
     hourly_now = store.read(HOURLY)
@@ -106,9 +110,8 @@ def refresh_rollups(
         )
     )
     if store.exists(DAILY):
-        store.overwrite(DAILY, M.upsert(store.read(DAILY), daily_delta, _KEYS))
-    else:
-        store.overwrite(DAILY, daily_delta)
+        daily_delta = M.upsert(store.read(DAILY), daily_delta, _KEYS)
+    commit(DAILY, daily_delta)
     return {
         "hourly_rows": store.read(HOURLY).count(),
         "daily_rows": store.read(DAILY).count(),

@@ -571,6 +571,15 @@ class TableStore:
             "epoch_scope": scope,
         }
 
+    def mark_epoch(
+        self, table: str, epoch_id: int, scope: "str | None" = None
+    ) -> None:
+        """Record ``(scope, epoch_id)`` as committed with no data
+        change: a property-only flip. For content fences that find a
+        batch has nothing to apply (an SCD2 snapshot already applied
+        under an earlier checkpoint), so its replay never re-probes."""
+        self.set_properties(table, **self._epoch_props(table, epoch_id, scope))
+
     def commit_epoch(
         self,
         table: str,

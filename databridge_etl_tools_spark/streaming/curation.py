@@ -188,34 +188,26 @@ def minhash_stream_into_store(
     runs ``plans.pipelines.incremental_dedup_pipeline`` (screen
     against the persisted store, append only the survivors'
     signatures, commit data + epoch watermark in one atomic manifest
-    flip). A replayed micro-batch (crash between store commit and
-    checkpoint write, or restart of the SAME checkpoint) is detected
-    by the CHECKPOINT-SCOPED epoch watermark BEFORE any screening
-    work and skipped — signatures are never double-inserted, so
+    flip). Replays are fenced by ``events.drain_fenced`` before any
+    screening work, so signatures are never double-inserted and
     ``availableNow`` over a staging directory equals the batch
     pipeline run file-for-file (pinned in
-    ``tests/test_streaming_dedup.py``). The scope matters: epoch ids
-    renumber from 0 under a FRESH checkpoint, so an unscoped
-    watermark would silently skip genuinely new files staged since —
-    scoping by ``checkpoint_identity`` makes those process normally
-    (their re-screen of already-stored docs is idempotent by content:
-    dup-of-store rows are dropped, nothing re-inserts).
+    ``tests/test_streaming_dedup.py``). Under a FRESH checkpoint the
+    re-screen of already-stored docs is idempotent by content:
+    dup-of-store rows are dropped, nothing re-inserts.
 
     Near-dup state lives in the STORE (k int64 per kept doc), not in
     streaming state — restarts and late re-sends are fenced by
     content, not by watermarks, which is what lets the dedup stream
     run unbounded."""
     from ..plans.pipelines import incremental_dedup_pipeline
-    from .events import checkpoint_identity
+    from .events import drain_fenced
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        scope = checkpoint_identity(checkpoint_dir)
-        if store.epoch_seen(table, epoch_id, scope):
-            return  # replayed epoch: already fully committed
+    def step(batch: DataFrame, epoch_id: int, scope: str, pending: list[str]) -> None:
         incremental_dedup_pipeline(
             store,
             table,
-            batch_df,
+            batch,
             id_col,
             text_col,
             epoch_id=epoch_id,
@@ -226,13 +218,7 @@ def minhash_stream_into_store(
             threshold=threshold,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_fenced(stream, store, [table], checkpoint_dir, step)
 
 
 def lid_score_stream(
@@ -306,10 +292,8 @@ def decontam_stream_screen(
     benchmark leak never lands at rest. Each micro-batch runs the
     batch screen (``operators.dedup.decontaminate_vs_store`` — the
     store side is static within a run) and commits its per-document
-    verdicts exactly-once on ``doc``, keyed by the CHECKPOINT-SCOPED
-    epoch watermark (epoch ids renumber from 0 under a fresh
-    checkpoint; an unscoped compare would silently skip genuinely new
-    batches). The gram store itself is read-only here — only
+    verdicts exactly-once on ``doc`` through ``events.drain_fenced``.
+    The gram store itself is read-only here — only
     ``plans.pipelines.register_benchmark_epoch`` writes it.
 
     O(delta) commit discipline: the verdict ledger grows with the
@@ -320,26 +304,15 @@ def decontam_stream_screen(
     rare keyed-rewrite fallback so ``doc`` stays unique; an identical
     re-send contributes no delta at all."""
     from ..operators.dedup import decontaminate_vs_store
-    from .events import checkpoint_identity
+    from .events import drain_fenced
 
     grams = store.read(gram_table)
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        scope = checkpoint_identity(checkpoint_dir)
-        if store.epoch_seen(verdict_table, epoch_id, scope):
-            return
-        verdicts = decontaminate_vs_store(
-            batch_df, grams, text_col, id_col, n=n
-        )
+    def step(batch: DataFrame, epoch_id: int, scope: str, pending: list[str]) -> None:
+        verdicts = decontaminate_vs_store(batch, grams, text_col, id_col, n=n)
         store.upsert_epoch(verdict_table, verdicts, ["doc"], epoch_id, scope=scope)
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_fenced(stream, store, [verdict_table], checkpoint_dir, step)
 
 
 def lid_stream_into_store(
@@ -361,36 +334,32 @@ def lid_stream_into_store(
     abstained rows for human or better-model triage, exactly what
     production pipelines do with fastText low-confidence scores).
 
-    Each micro-batch commits BOTH tables under the checkpoint-scoped
-    exactly-once epoch contract, independently fenced: a crash
-    between the two commits replays the epoch, the already-committed
-    table skips, the lagging one catches up — and the doc-keyed
-    upsert makes any cross-run re-send overwrite rather than
-    duplicate. The split stays DISJOINT across runs: a re-sent
-    document whose confidence FLIPPED (fuller text, better model) is
-    evicted from its old side in the same epoch it lands on the new
-    side, so scored ∪ quarantine never double-counts a doc.
+    Each micro-batch commits BOTH tables exactly-once through
+    ``events.drain_fenced``, and the doc-keyed upsert makes any
+    cross-run re-send overwrite rather than duplicate. The split
+    stays DISJOINT across runs: a re-sent document whose confidence
+    FLIPPED (fuller text, better model) is evicted from its old side
+    in the same epoch it lands on the new side, so scored ∪
+    quarantine never double-counts a doc.
     ``availableNow`` drain == batch split, pinned in
     ``tests/test_model_registry.py``."""
-    from .events import checkpoint_identity
+    from ..operators.merge import upsert
+    from .events import drain_fenced
 
     scored = lid_score_stream(
         stream, models, text_col=text_col, margin_threshold=margin_threshold
     )
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        scope = checkpoint_identity(checkpoint_dir)
+    def step(batch_df: DataFrame, epoch_id: int, scope: str, pending: list[str]) -> None:
         batch = batch_df.localCheckpoint()
-        parts = [
-            (scored_table, batch.filter(F.col("confident"))),
-            (quarantine_table, batch.filter(~F.col("confident"))),
-        ]
-        for (tbl, part), (_, other) in (
-            (parts[0], parts[1]),
-            (parts[1], parts[0]),
-        ):
-            if store.epoch_seen(tbl, epoch_id, scope):
-                continue
+        confident = batch.filter(F.col("confident"))
+        abstained = batch.filter(~F.col("confident"))
+        split = {
+            scored_table: (confident, abstained),
+            quarantine_table: (abstained, confident),
+        }
+        for tbl in pending:
+            part, other = split[tbl]
             if not store.exists(tbl):
                 store.upsert_epoch(tbl, part, [id_col], epoch_id, scope=scope)
                 continue
@@ -407,18 +376,10 @@ def lid_stream_into_store(
                 kept = existing.join(
                     other.select(id_col), [id_col], "left_anti"
                 )
-                from ..operators.merge import upsert
-
                 merged = upsert(kept, part.select(*existing.columns), [id_col])
                 store.commit_epoch(tbl, merged, epoch_id, scope=scope)
 
-    q = (
-        scored.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_fenced(scored, store, [scored_table, quarantine_table], checkpoint_dir, step)
 
 
 def requalify_quarantine(

@@ -300,6 +300,39 @@ def checkpoint_identity(checkpoint_dir: str) -> str:
     return os.path.abspath(local_dir)
 
 
+def drain_fenced(stream: DataFrame, store, tables: list[str], checkpoint_dir: str, step) -> None:
+    """The exactly-once micro-batch drain every TableStore streaming
+    sink runs through: ``availableNow`` over ``stream`` (drain what is
+    staged, then stop), checkpointed at ``checkpoint_dir``, each
+    micro-batch fenced by the epoch watermarks of ``tables``.
+
+    Per batch, the fence scope is ``checkpoint_identity`` (Spark writes
+    the checkpoint metadata at start, so it is derived inside the
+    batch) and ``pending`` is the listed tables that have not yet
+    committed ``(scope, epoch_id)``, in listed order. A batch with
+    nothing pending is a replay and is skipped before any work;
+    otherwise ``step(batch, epoch_id, scope, pending)`` runs and must
+    commit each pending table through an epoch commit carrying that
+    scope and epoch id. A crash between two commits of one batch makes
+    Spark replay the epoch with only the lagging tables pending — the
+    one multi-table rule, Delta's ``txnAppId``/``txnVersion`` recipe
+    on the versioned store."""
+
+    def handle(batch_df: DataFrame, epoch_id: int) -> None:
+        scope = checkpoint_identity(checkpoint_dir)
+        pending = [t for t in tables if not store.epoch_seen(t, epoch_id, scope)]
+        if pending:
+            step(batch_df, epoch_id, scope, pending)
+
+    (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def stream_upsert_into_store(
     stream: DataFrame,
     store,
@@ -309,61 +342,34 @@ def stream_upsert_into_store(
     staging_order: list | None = None,
 ) -> None:
     """Checkpointed exactly-once upsert sink (ROADMAP 4): every
-    micro-batch merges into a TableStore table via ``foreachBatch``,
-    committing data + epoch watermark in one atomic manifest flip
-    (``TableStore.commit_epoch``). A crash between the store commit
-    and the checkpoint write makes Spark replay the epoch; the store
-    detects the replayed epoch_id and skips — the standard idempotent-
-    sink contract (Delta's txnAppId/txnVersion recipe) on the local
-    versioned store.
+    micro-batch merges into a TableStore table through
+    ``drain_fenced``, committing data + epoch watermark in one atomic
+    manifest flip. Commits through ``TableStore.upsert_epoch``, which
+    creates the table on the first epoch: all-new-key batches append
+    O(delta) segments; re-sent/changed keys take the keyed-rewrite
+    fallback."""
 
-    Runs with availableNow (drain-what-is-staged, then stop): the
-    batch-ish mode an S3-staging ingest job uses. Commits through
-    ``TableStore.upsert_epoch``: all-new-key batches append O(delta)
-    segments; re-sent/changed keys take the keyed-rewrite fallback."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        scope = checkpoint_identity(checkpoint_dir)
-        if not store.exists(table):
-            store.create_table(table, batch_df.schema)
+    def step(batch: DataFrame, epoch_id: int, scope: str, pending: list[str]) -> None:
         store.upsert_epoch(
-            table, batch_df, keys, epoch_id, scope=scope,
-            staging_order=staging_order,
+            table, batch, keys, epoch_id, scope=scope, staging_order=staging_order
         )
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_fenced(stream, store, [table], checkpoint_dir, step)
 
 
 def stream_rollup_into_store(stream: DataFrame, store, checkpoint_dir: str) -> None:
     """Streaming twin of the incremental rollup cascade
     (``plans/rollups.refresh_rollups``): each micro-batch folds into
-    the hourly table exactly-once (epoch-committed) and re-derives
-    the touched daily buckets idempotently — the TimescaleDB
-    continuous-aggregate shape as a checkpointed foreachBatch sink."""
-    from ..plans.rollups import refresh_rollups
+    the hourly table and re-derives the touched daily buckets, both
+    epoch-committed — the TimescaleDB continuous-aggregate shape as a
+    ``drain_fenced`` sink. Both tables are fenced: a replay whose
+    hourly fold already committed still re-derives the daily level."""
+    from ..plans.rollups import DAILY, HOURLY, refresh_rollups
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        refresh_rollups(
-            batch_df.sparkSession,
-            store,
-            batch_df,
-            epoch_id=epoch_id,
-            epoch_scope=checkpoint_identity(checkpoint_dir),
-        )
+    def step(batch: DataFrame, epoch_id: int, scope: str, pending: list[str]) -> None:
+        refresh_rollups(batch.sparkSession, store, batch, epoch_id=epoch_id, epoch_scope=scope)
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_fenced(stream, store, [HOURLY, DAILY], checkpoint_dir, step)
 
 
 def enrich_stream(
@@ -407,9 +413,7 @@ def stream_scd2_into_store(
     ``maxFilesPerTrigger=1``) evolves the stored type-2 history
     exactly-once. Each batch reads the current history, applies
     ``operators.merge.scd2_apply`` at the snapshot's date, and commits
-    history + epoch in one atomic manifest flip — replayed epochs are
-    skipped, so a crash between commit and checkpoint cannot
-    double-close or double-open a version.
+    history + epoch in one atomic manifest flip.
 
     The batch date comes from ``date_col``, which must be constant
     within a batch (asserted — a mixed batch means two snapshots were
@@ -417,24 +421,22 @@ def stream_scd2_into_store(
 
     Two independent replay fences, because SCD2 re-application is NOT
     idempotent (re-applying an old snapshot onto the evolved history
-    closes/reopens rows with stale dates): the checkpoint-scoped
-    epoch watermark fences same-checkpoint replays, and a CONTENT
-    fence — the max applied snapshot date, committed in the same
-    atomic flip as the history (``scd2_max_date``) — fences a
-    checkpoint RESET, where a fresh checkpoint re-lists every staged
-    snapshot under a new scope and the epoch fence alone would re-run
-    history from the start. Any snapshot dated <= the stored max is
-    skipped (its watermark still advances so the replay never
-    re-probes); snapshots must therefore arrive in date order, which
-    the one-snapshot-per-trigger staging contract already implies."""
-    from pyspark.sql import types as T
-
+    closes/reopens rows with stale dates): ``drain_fenced`` fences
+    same-checkpoint replays, and a CONTENT fence — the max applied
+    snapshot date, committed in the same atomic flip as the history
+    (``scd2_max_date``) — fences a checkpoint RESET, where a fresh
+    checkpoint re-lists every staged snapshot under a new scope and
+    the epoch fence alone would re-run history from the start. Any
+    snapshot dated <= the stored max is skipped (its watermark still
+    advances so the replay never re-probes); snapshots must therefore
+    arrive in date order, which the one-snapshot-per-trigger staging
+    contract already implies."""
     from ..operators.merge import scd2_apply
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
+    def step(batch: DataFrame, epoch_id: int, scope: str, pending: list[str]) -> None:
+        dates = batch.agg(F.collect_set(date_col)).first()[0]
+        if not dates:
             return
-        dates = [r.d for r in batch_df.select(F.col(date_col).alias("d")).distinct().collect()]
         if len(dates) != 1:
             raise ValueError(
                 f"stream_scd2_into_store: batch {epoch_id} carries "
@@ -442,21 +444,15 @@ def stream_scd2_into_store(
                 "snapshot per trigger (maxFilesPerTrigger=1)"
             )
         batch_date = dates[0].isoformat()
-        scope = checkpoint_identity(checkpoint_dir)
-        snap = batch_df.drop(date_col)
+        snap = batch.drop(date_col)
         if store.exists(table):
-            if store.epoch_seen(table, epoch_id, scope):
-                return  # replayed epoch: already committed
             applied_max = store.properties(table).get("scd2_max_date")
             if applied_max is not None and batch_date <= applied_max:
                 # content fence: an already-applied snapshot re-listed
                 # by a RESET checkpoint (new scope, epochs from 0) —
                 # advance this scope's watermark without touching the
-                # history (empty-delta commit of the current state
-                # would rewrite the table; a property flip is enough)
-                store.set_properties(
-                    table, **store._epoch_props(table, epoch_id, scope)
-                )
+                # history
+                store.mark_epoch(table, epoch_id, scope)
                 return
         else:
             hist_schema = T.StructType(
@@ -477,13 +473,7 @@ def stream_scd2_into_store(
             extra_props={"scd2_max_date": batch_date},
         )
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_fenced(stream, store, [table], checkpoint_dir, step)
 
 
 def stream_transitions(stream: DataFrame) -> DataFrame:

@@ -20,14 +20,12 @@ fit in-stream — the train-offline / score-online production shape:
 a scoring job must not depend on the fitting session, and a
 micro-batch must never see model drift mid-run.
 
-Exactly-once: each micro-batch commits three tables under the
-checkpoint-scoped epoch contract, independently fenced (a crash
-between commits replays the epoch; committed tables skip, lagging
-ones catch up). Flags/identity are doc-keyed ``upsert_epoch``
-(O(delta) writes, cross-run re-sends overwrite); the KMV sketch is a
-bounded |sources|·k-row table committed whole (``commit_epoch``) —
-rewriting it per batch IS the O(delta) cost model, because the
-sketch never grows.
+Exactly-once: each micro-batch commits three tables through
+``streaming.events.drain_fenced``. Flags/identity are doc-keyed
+``upsert_epoch`` (O(delta) writes, cross-run re-sends overwrite); the
+KMV sketch is a bounded |sources|·k-row table committed whole
+(``commit_epoch``) — rewriting it per batch IS the O(delta) cost
+model, because the sketch never grows.
 """
 
 from __future__ import annotations
@@ -41,7 +39,7 @@ from ..operators.curation import (
     kmv_merge_by,
     source_token_sketch,
 )
-from .events import checkpoint_identity
+from .events import drain_fenced
 
 
 def curation_funnel_stream_into_store(
@@ -77,36 +75,29 @@ def curation_funnel_stream_into_store(
     lid_models = load_models(registry_store, registry_table, lid_name)
     qmodel = load_models(registry_store, registry_table, quality_name)[0]
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        scope = checkpoint_identity(checkpoint_dir)
-        batch = batch_df.localCheckpoint()
-        if not store.epoch_seen(flags_table, epoch_id, scope):
-            flags = curation_screen(batch, lid_models, qmodel)
-            store.upsert_epoch(
-                flags_table, flags, ["doc_id"], epoch_id, scope=scope
-            )
-        if not store.epoch_seen(fps_table, epoch_id, scope):
-            store.upsert_epoch(
-                fps_table, doc_identity(batch), ["doc_id"], epoch_id,
-                scope=scope,
-            )
-        if not store.epoch_seen(kmv_table, epoch_id, scope):
-            delta = source_token_sketch(batch, k=k)
-            if store.exists(kmv_table):
-                merged = kmv_merge_by(
-                    [store.read(kmv_table), delta], "source", k=k
-                )
-            else:
-                merged = delta
-            store.commit_epoch(kmv_table, merged, epoch_id, scope=scope)
+    keyed = {
+        flags_table: lambda batch: curation_screen(batch, lid_models, qmodel),
+        fps_table: doc_identity,
+    }
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    def step(batch_df: DataFrame, epoch_id: int, scope: str, pending: list[str]) -> None:
+        batch = batch_df.localCheckpoint()
+        for tbl in pending:
+            if tbl in keyed:
+                store.upsert_epoch(
+                    tbl, keyed[tbl](batch), ["doc_id"], epoch_id, scope=scope
+                )
+                continue
+            sketch = source_token_sketch(batch, k=k)
+            if store.exists(kmv_table):
+                sketch = kmv_merge_by(
+                    [store.read(kmv_table), sketch], "source", k=k
+                )
+            store.commit_epoch(kmv_table, sketch, epoch_id, scope=scope)
+
+    drain_fenced(
+        stream, store, [flags_table, fps_table, kmv_table], checkpoint_dir, step
     )
-    q.awaitTermination()
 
 
 def curation_funnel_finalize(

@@ -13,7 +13,10 @@
   (auto-compaction inside the epoch flip);
 - ``checkpoint_identity`` never degrades silently: remote dirs raise,
   local fallback warns;
-- ``pagerank_py`` refuses mixed 2-/3-tuple edge lists.
+- ``pagerank_py`` refuses mixed 2-/3-tuple edge lists;
+- ``drain_fenced`` under a crash between commits: a re-drain of the
+  same checkpoint commits only the lagging tables and never re-runs
+  a fully committed epoch.
 """
 
 import json
@@ -232,3 +235,139 @@ def test_pagerank_py_rejects_mixed_arity_edges():
     # homogeneous lists still work
     assert pagerank_py([(1, 2), (2, 1)])
     assert pagerank_py([(1, 2, 2), (2, 1, 3)])
+
+
+def _stage_events(spark, path):
+    """Three files of the sf0.001 events → three micro-batches under
+    ``read_event_stream`` (maxFilesPerTrigger=1), split by day."""
+    from databridge_etl_tools_spark.registry import table as load_table
+
+    ev = load_table(spark, "/root/testdata/sf0.001", "events").limit(600).cache()
+    day = F.dayofmonth("ts")
+    ev.where(day <= 10).coalesce(1).write.parquet(path)
+    ev.where((day > 10) & (day <= 20)).coalesce(1).write.mode("append").parquet(path)
+    ev.where(day > 20).coalesce(1).write.mode("append").parquet(path)
+    return ev
+
+
+def _crash_once(monkeypatch, store, method, table, epoch_id):
+    """Make ``store.<method>`` raise once for ``(table, epoch_id)``;
+    returns the list the injected crash is recorded in."""
+    real = getattr(store, method)
+    crashed = []
+
+    def flaky(tbl, df, *args, **kwargs):
+        epoch = args[1] if method == "upsert_epoch" else args[0]
+        if tbl == table and epoch == epoch_id and not crashed:
+            crashed.append((tbl, epoch))
+            raise RuntimeError(f"injected crash before the {tbl} commit")
+        return real(tbl, df, *args, **kwargs)
+
+    monkeypatch.setattr(store, method, flaky)
+    return crashed
+
+
+def test_drain_fenced_never_reruns_a_committed_epoch(spark, tmp_path):
+    """A step that commits and then crashes: the re-drain replays the
+    epoch, finds nothing pending and never calls the step for it."""
+    staging = str(tmp_path / "staging")
+    _stage_events(spark, staging)
+    store = TableStore(spark, str(tmp_path / "store"))
+    ck = str(tmp_path / "ck")
+    calls = []
+
+    def step(batch, epoch_id, scope, pending):
+        calls.append((epoch_id, list(pending)))
+        store.commit_epoch("t", batch.select("event_id"), epoch_id, scope=scope)
+        if epoch_id == 0 and len(calls) == 1:
+            raise RuntimeError("injected crash after the commit")
+
+    with pytest.raises(Exception, match="injected crash after the commit"):
+        SE.drain_fenced(SE.read_event_stream(spark, staging), store, ["t"], ck, step)
+    assert calls == [(0, ["t"])]
+    assert len(store.history("t")) == 1
+
+    calls.clear()
+    SE.drain_fenced(SE.read_event_stream(spark, staging), store, ["t"], ck, step)
+    assert calls == [(1, ["t"]), (2, ["t"])]
+    assert len(store.history("t")) == 3
+
+
+def test_rollup_drain_crash_between_hourly_and_daily(spark, tmp_path, monkeypatch):
+    """The DAILY commit of one micro-batch crashes after its HOURLY
+    fold committed. The re-drain replays the epoch with only DAILY
+    pending; DAILY re-derives from HOURLY, and both equal the batch
+    cascade. Fencing on HOURLY alone would leave DAILY stale."""
+    from databridge_etl_tools_spark.plans import rollups as R
+
+    staging = str(tmp_path / "staging")
+    ev = _stage_events(spark, staging)
+    store = TableStore(spark, str(tmp_path / "store"))
+    ck = str(tmp_path / "ck")
+    crashed = _crash_once(monkeypatch, store, "commit_epoch", R.DAILY, 1)
+
+    with pytest.raises(Exception, match="injected crash"):
+        SE.stream_rollup_into_store(SE.read_event_stream(spark, staging), store, ck)
+    assert crashed == [(R.DAILY, 1)]
+    assert store.epoch_seen(R.HOURLY, 1, SE.checkpoint_identity(ck))
+    assert not store.epoch_seen(R.DAILY, 1, SE.checkpoint_identity(ck))
+
+    SE.stream_rollup_into_store(SE.read_event_stream(spark, staging), store, ck)
+
+    batch_store = TableStore(spark, str(tmp_path / "batch"))
+    R.refresh_rollups(spark, batch_store, ev)
+    for tbl in (R.HOURLY, R.DAILY):
+        got = {tuple(r) for r in store.read(tbl).collect()}
+        want = {tuple(r) for r in batch_store.read(tbl).collect()}
+        assert got == want, f"{tbl} diverged from the batch cascade"
+
+
+def test_lid_drain_crash_between_scored_and_quarantine(spark, tmp_path, monkeypatch):
+    """The quarantine commit of epoch 0 crashes after the scored
+    commit landed. The re-drain of the same checkpoint leaves the
+    scored table's commit log as it was, catches the quarantine up,
+    and both tables equal an uncrashed run."""
+    from databridge_etl_tools_spark.operators.lid import LANGS, lid_fit, plant_markers
+    from databridge_etl_tools_spark.registry import table as load_table
+    from databridge_etl_tools_spark.streaming import curation as C
+
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    models = lid_fit(docs)
+    for m, lg in zip(models, LANGS):
+        m["label"] = lg
+    staged = plant_markers(docs.filter(F.col("doc_id") < 80)).select(
+        "doc_id", "text", "lang", "source", "n_chars"
+    ).unionByName(
+        spark.createDataFrame(
+            [(9001, "ab", "en", "s", 2)],
+            "doc_id long, text string, lang string, source string, n_chars long",
+        )
+    )
+    staging = str(tmp_path / "stage")
+    staged.coalesce(1).write.parquet(staging)
+
+    def drain(store, ck):
+        C.lid_stream_into_store(
+            C.read_document_stream(spark, staging), models, store,
+            "sc", "quar", str(ck), margin_threshold=0.5,
+        )
+
+    def rows(store, tbl):
+        return sorted(map(tuple, store.read(tbl).collect()))
+
+    clean = TableStore(spark, str(tmp_path / "clean"))
+    drain(clean, tmp_path / "ck_clean")
+    assert rows(clean, "sc") and rows(clean, "quar")
+
+    store = TableStore(spark, str(tmp_path / "store"))
+    crashed = _crash_once(monkeypatch, store, "upsert_epoch", "quar", 0)
+    with pytest.raises(Exception, match="injected crash"):
+        drain(store, tmp_path / "ck")
+    assert crashed == [("quar", 0)]
+    assert not store.exists("quar")
+    scored_log = store.history("sc")
+
+    drain(store, tmp_path / "ck")
+    assert store.history("sc") == scored_log
+    assert rows(store, "sc") == rows(clean, "sc")
+    assert rows(store, "quar") == rows(clean, "quar")

@@ -4,6 +4,7 @@ first-principles twin cross-checking the native session_window."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from databridge_etl_tools_spark.registry import table as load_table
@@ -432,3 +433,26 @@ def test_upsert_epoch_property_sweep_matches_dict_replay(spark, tmp_path):
     assert got == oracle
     dup = store.read("t").groupBy("k").count().filter(F.col("count") > 1)
     assert dup.count() == 0
+
+
+def test_stream_upsert_sink_first_batch_duplicates(spark, tmp_path):
+    """The sink's first micro-batch creates the table through
+    ``upsert_epoch``: an identical duplicate row collapses, and
+    conflicting rows for one key raise with nothing committed."""
+
+    def drain(rows, name):
+        staging = str(tmp_path / f"{name}_staging")
+        spark.createDataFrame(rows, "k long, v string").coalesce(1).write.parquet(staging)
+        store = TableStore(spark, str(tmp_path / f"{name}_store"))
+        SE.stream_upsert_into_store(
+            spark.readStream.schema("k long, v string").parquet(staging),
+            store, "t", keys=["k"], checkpoint_dir=str(tmp_path / f"{name}_ckpt"),
+        )
+        return store
+
+    store = drain([(1, "a"), (1, "a"), (2, "b")], "identical")
+    assert sorted(map(tuple, store.read("t").collect())) == [(1, "a"), (2, "b")]
+
+    with pytest.raises(Exception, match="conflicting intra-batch"):
+        drain([(1, "a"), (1, "b"), (2, "b")], "conflicting")
+    assert not TableStore(spark, str(tmp_path / "conflicting_store")).exists("t")
