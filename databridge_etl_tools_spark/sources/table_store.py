@@ -502,7 +502,7 @@ class TableStore:
         self, table: str, epoch_id: int, scope: "str | None" = None
     ) -> bool:
         """True when ``(scope, epoch_id)`` is already committed — the
-        replay test streaming ``foreachBatch`` sinks run before any
+        replay test ``streaming.events.drain_fenced`` runs before any
         work. Spark epoch ids are CHECKPOINT-scoped: a query restarted
         against a FRESH checkpoint (even at the same path) renumbers
         from 0, so an unscoped ``last_epoch >= epoch_id`` compare
@@ -588,7 +588,7 @@ class TableStore:
         scope: "str | None" = None,
         extra_props: "dict | None" = None,
     ) -> bool:
-        """Exactly-once commit point for streaming ``foreachBatch``:
+        """Exactly-once commit point for streaming micro-batches:
         the new data version and the epoch watermark flip in ONE
         atomic manifest replace, so a replayed epoch (Spark re-runs a
         failed micro-batch with the same epoch_id) is detected and
