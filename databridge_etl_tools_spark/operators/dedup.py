@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import graph
 from . import textstats as TS
 from .materialize import materialize
 from .util import maybe_broadcast, spread
@@ -704,49 +705,28 @@ def winnow_overlap_pairs(
 def connected_components(
     vertices: DataFrame, edges: DataFrame, id_col: str = "id", max_iters: int = 50
 ) -> DataFrame:
-    """Duplicate-cluster assignment: min-label propagation to a
-    fixpoint over an undirected pair graph → (id, component) where
-    component is the smallest member id.
+    """Duplicate-cluster assignment → ``(id_col, component)``, where
+    component is the smallest member id — how near-dup PAIRS
+    (jaccard/minhash/simhash output) become dedup DECISIONS: one
+    canonical representative per component.
 
-    This is how near-dup PAIRS (jaccard/minhash/simhash output) become
-    dedup DECISIONS: one canonical representative per component.
-
-    Scale: each iteration is one hash join on the vertex id; the loop
-    runs until no label changes (≤ graph diameter iterations — dup
-    clusters are shallow). Spark-side iteration materializes each
-    round with a lineage-CUTTING strategy (cut_lineage=True: without
-    truncation the logical plan doubles per iteration and analysis
-    time explodes long before data size matters), so the frontier is
-    checkpointed — locally by default, reliably on clusters.
-    """
+    An adapter over ``graph.connected_components`` (the one
+    connected-components loop — its driver route, frontier-delta
+    rounds and fixpoint exit): the ``(doc_a, doc_b)`` pairs go in
+    both directions with ``max_iters`` as the round bound, and
+    ``vertices`` left-joins the labels so that an id with no pair
+    labels itself."""
     sym = edges.selectExpr("doc_a AS src", "doc_b AS dst").unionByName(
         edges.selectExpr("doc_b AS src", "doc_a AS dst")
     )
-    labels = vertices.select(F.col(id_col).alias("v"), F.col(id_col).alias("label"))
-    for _ in range(max_iters):
-        neighbor_min = (
-            sym.join(labels, sym.dst == labels.v)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = materialize(
-            labels.join(neighbor_min, labels.v == neighbor_min.src, "left").select(
-                "v", F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label")
-            ),
-            cut_lineage=True,
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "v")
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if not changed:
-            break
-    return labels.select(F.col("v").alias(id_col), F.col("label").alias("component"))
-
+    labels = graph.connected_components(sym, iters=max_iters).toDF(id_col, "_cc")
+    own = F.col(id_col)
+    component = F.coalesce("_cc", own).cast(vertices.schema[id_col].dataType)
+    return (
+        vertices.select(own)
+        .join(labels, id_col, "left")
+        .select(own, component.alias("component"))
+    )
 
 
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

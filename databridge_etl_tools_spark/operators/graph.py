@@ -41,7 +41,7 @@ reproducible everywhere, converging to the float fixpoint within
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from . import route
@@ -662,21 +662,26 @@ def connected_components(
     dst: str = "dst",
     iters: int = 6,
 ) -> DataFrame:
-    """Connected components as a min-label fixpoint: every node starts
-    as its own label, each round takes ``min(label, min over incoming
-    neighbors' labels)``. The update is MONOTONE (labels only
-    decrease), so like BFS it unrolls into oracle CTE levels, and the
-    engine may propagate only the CHANGED frontier — a node whose
-    label did not change last round has nothing new to offer its
-    neighbors (the min-merge would discard the re-delivery) — while
-    the unrolled twin re-propagates everything: identical labels at
-    every level, strictly less join work (the BFS frontier-delta
-    argument, pinned in tests). After ``iters`` rounds, nodes within
-    graph distance ``iters`` of their component's minimum carry it;
-    ``iters`` is the replay contract (covers diameter ≤ iters — at
-    web scale you'd run log-diameter rounds of the same plan shape).
-    Supply both edge directions for an undirected graph. Returns
-    ``(node, label)``."""
+    """Connected components as a min-label fixpoint — the package's
+    one connected-components loop (``dedup.connected_components`` and
+    ``er`` adapt it). Every node starts as its own label, each round
+    takes ``min(label, min over incoming neighbors' labels)``. The
+    update is MONOTONE (labels only decrease), so like BFS it unrolls
+    into oracle CTE levels, and the engine may propagate only the
+    CHANGED frontier — a node whose label did not change last round
+    has nothing new to offer its neighbors (the min-merge would
+    discard the re-delivery) — while the unrolled twin re-propagates
+    everything: identical labels at every level, strictly less join
+    work (the BFS frontier-delta argument, pinned in tests).
+
+    ``iters`` is an upper bound on rounds: nodes within graph
+    distance ``iters`` of their component's minimum carry it (the
+    replay contract — covers diameter ≤ iters). The loop stops after
+    the first round that changes no label, since every later round
+    would change none either. That check adds no Spark job: it is a
+    ``count_if(label < old)`` Observation on the round's
+    lineage-cutting checkpoint. Supply both edge directions for an
+    undirected graph. Returns ``(node, label)``."""
     from .materialize import materialize
 
     raw = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
@@ -710,19 +715,25 @@ def connected_components(
             .groupBy(F.col("_dst").alias("node"))
             .agg(F.min("label").alias("_nl"))
         )
+        lowered = Observation()
         merged = materialize(
-            labels.join(prop, "node", "left").select(
+            labels.join(prop, "node", "left")
+            .select(
                 "node",
                 F.col("label").alias("_old"),
                 F.least(
                     F.col("label"), F.coalesce(F.col("_nl"), F.col("label"))
                 ).alias("label"),
             )
+            .observe(lowered, F.count_if(F.col("label") < F.col("_old")).alias("n")),
+            cut_lineage=True,
         )
+        labels = merged.select("node", "label")
+        if lowered.get["n"] == 0:
+            break
         frontier = merged.where(F.col("label") < F.col("_old")).select(
             "node", "label"
         )
-        labels = merged.select("node", "label")
     return labels
 
 

@@ -202,7 +202,9 @@ def connected_components_np(src, dst, *, iters: int):
     for _ in range(iters):
         prop = labels.copy()
         np.minimum.at(prop, di, labels[si])
-        labels = np.minimum(labels, prop)
+        if np.array_equal(prop, labels):
+            break
+        labels = prop
     return nodes, nodes[labels]
 
 

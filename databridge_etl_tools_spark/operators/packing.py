@@ -8,26 +8,17 @@ of (order, token counts) — ``floor(exclusive_prefix_sum / budget)`` —
 independent of physical partitioning, which is what makes it
 oracle-checkable and retry-stable.
 
-The prefix sum is computed with the standard two-pass distributed
-recipe, NOT a global single-partition window (the classic 100 TB
-scale-killer: ``Window.orderBy`` without ``partitionBy`` funnels the
-corpus through one task):
-
-1. range-partition by the order key, cumsum WITHIN each partition
-   (window partitioned by ``spark_partition_id``);
-2. collect the per-partition totals (``n_parts`` scalars — bounded,
-   like k-means centroids), prefix-sum them on the driver, and
-   broadcast the offsets back.
-
-The result is identical for ANY partition boundaries — the offsets
-cancel the arbitrariness — pinned by the single-partition-twin test.
+The exclusive prefix sum is ``prefixsum.running_sum`` (the two-pass
+distributed recipe, never a single-partition window) minus the row's
+own size; the recipe and its invariants are documented there.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from .prefixsum import internal_names, running_sum
 
 
 def pack_sequences(
@@ -42,45 +33,12 @@ def pack_sequences(
     ``id_col``; ``size_col`` is the row's token count. ``n_parts``
     defaults to ``prefixsum.derived_range_partitions`` (scales with
     input size / cluster width instead of a hard constant)."""
-    from .materialize import materialize
-    from .prefixsum import derived_range_partitions, internal_names
-
-    if n_parts is None:
-        n_parts = derived_range_partitions(df)
-    c_n, c_pid, c_local, c_off = internal_names(df, "n", "pid", "local_start", "offset")
+    (c_n,) = internal_names(df, "n")
     size = F.col(size_col) if isinstance(size_col, str) else size_col
     base = df.withColumn(c_n, size.cast("bigint"))
-    parts = base.repartitionByRange(n_parts, F.col(id_col)).withColumn(
-        c_pid, F.spark_partition_id()
-    )
-    w = (
-        Window.partitionBy(c_pid)
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # materialized with cut_lineage: the totals job and the final plan
-    # must see the SAME partition assignment — repartitionByRange's
-    # sampled boundaries are not re-execution-stable (r7: the
-    # running_sum oracle caught a 3-row boundary shift skewing every
-    # offset; same two-consumer shape here). Lineage-keeping
-    # strategies (persist recompute / none) re-run the range
-    # partitioning per consumer and re-expose the hazard (r7 advisor).
-    local = materialize(
-        parts.withColumn(c_local, F.coalesce(F.sum(c_n).over(w), F.lit(0))),
-        cut_lineage=True,
-    )
-    totals = (
-        local.groupBy(c_pid).agg(F.sum(c_n).alias("_total")).orderBy(c_pid).collect()
-    )
-    acc = 0
-    offsets = []
-    for r in totals:
-        offsets.append((r[c_pid], acc))
-        acc += r["_total"]
-    off_df = local.sparkSession.createDataFrame(offsets, f"{c_pid} int, {c_off} bigint")
     return (
-        local.join(F.broadcast(off_df), c_pid)
-        .withColumn("seq_start", F.col(c_off) + F.col(c_local))
+        running_sum(base, [id_col], c_n, n_parts=n_parts, out_col="seq_start")
+        .withColumn("seq_start", F.col("seq_start") - F.col(c_n))
         .withColumn("seq_id", F.expr(f"seq_start DIV {budget}"))
-        .drop(c_pid, c_local, c_off, c_n)
+        .drop(c_n)
     )

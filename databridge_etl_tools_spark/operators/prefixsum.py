@@ -3,8 +3,12 @@
 ``SUM(x) OVER (ORDER BY k ROWS UNBOUNDED PRECEDING)`` with no
 PARTITION BY is the canonical single-task killer: Spark plans an
 ``Exchange SinglePartition`` and sorts the entire input in one task.
-The distributed classic is the two-pass prefix sum (the same shape
-``packing.pack_sequences`` uses for token offsets, generalized here):
+The distributed classic is the two-pass prefix sum, and
+:func:`running_sum` is the package's one implementation of it. Every
+global ordered running value goes through it: token offsets
+(``packing.pack_sequences``), vocabulary ranks (``vocab.build_vocab``),
+dense row indexes (``sequences.dense_index``) and the running-total
+queries. The recipe:
 
 1. ``repartitionByRange`` on the order keys — disjoint, ordered key
    ranges, each sorted LOCALLY by its own task;

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .prefixsum import derived_range_partitions
+
 #: 2^32 — the hash-unit denominator (8 md5 hex chars)
 _UNIT = float(1 << 32)
 
@@ -306,21 +308,18 @@ def epoch_shuffle(
 
     ``n_shards`` is the scale knob: each shard is one window task, so
     size it to ~task-sized row counts. The default derives from the
-    input — ``max(input partitions, spark.sql.shuffle.partitions)`` —
-    the same input-scaled rule as ``prefixsum.running_sum`` (r7
-    advisor): a fixed constant means corpus/constant rows sorted per
-    task at 100 TB. Hash-seeded ⇒ RESUMABLE: re-running any subset of
+    input — ``prefixsum.derived_range_partitions``, ``max(input
+    partitions, spark.sql.shuffle.partitions)``, the rule
+    ``prefixsum.running_sum`` sizes its range partitions with: a
+    fixed constant means corpus/constant rows sorted per task at
+    100 TB. Hash-seeded ⇒ RESUMABLE: re-running any subset of
     shards reproduces identical positions, which rand()-ordered sorts
     cannot. Appends (shard, pos, global_pos) to the input columns.
     """
     from pyspark.sql import Window
 
     if n_shards is None:
-        spark = df.sparkSession
-        n_shards = max(
-            df.rdd.getNumPartitions(),
-            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        )
+        n_shards = derived_range_partitions(df)
     hv = F.conv(
         F.substring(
             F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))),
@@ -387,11 +386,7 @@ def curriculum_order(
     from .orderstats import kth_smallest
 
     if n_shards is None:
-        spark = df.sparkSession
-        n_shards = max(
-            df.rdd.getNumPartitions(),
-            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        )
+        n_shards = derived_range_partitions(df)
     # key-contract validation (r9 advice): the combined key
     # difficulty·mult + id is injective and order-preserving ONLY for
     # integral difficulty and non-negative integer ids within

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .prefixsum import internal_names, running_sum
+
 
 def user_sequences(
     events: DataFrame,
@@ -59,21 +61,16 @@ def user_sequences(
 
 
 def dense_index(df: DataFrame, id_col: str = "doc_id", n_parts: int = 32) -> DataFrame:
-    """Dense 0..N-1 row index in ``id_col`` order — the two-pass
-    distributed prefix sum from ``operators.packing`` with a constant
-    size of 1 (range partitions → local cumsum → driver prefix of
-    bounded totals), never a global single-partition window. Returns
-    the input keys plus ``row_index BIGINT``."""
-    from .packing import pack_sequences
-
-    out = pack_sequences(
-        df.withColumn("_one", F.lit(1)), "_one", id_col=id_col, budget=1,
-        n_parts=n_parts,
+    """Dense 0..N-1 row index in ``id_col`` order — a running count
+    (``prefixsum.running_sum`` over a constant 1, minus 1), never a
+    global single-partition window. Returns the input keys plus
+    ``row_index BIGINT``."""
+    (c_one,) = internal_names(df, "one")
+    out = running_sum(
+        df.withColumn(c_one, F.lit(1)), [id_col], c_one, n_parts=n_parts,
+        out_col="row_index",
     )
-    return (
-        out.withColumn("row_index", F.col("seq_start").cast("bigint"))
-        .drop("seq_id", "seq_start", "_one")
-    )
+    return out.withColumn("row_index", F.col("row_index") - 1).drop(c_one)
 
 
 def negative_samples(

@@ -11,13 +11,10 @@ Scale design:
   smaller than the corpus), but at 100 TB a vocabulary is still
   10⁸–10⁹ rows, so the frequency rank NEVER runs through a global
   ``Window.orderBy`` (the single-partition scale-killer this repo's
-  own ``operators.util`` warns against). Instead it uses the same
-  two-pass distributed recipe as ``operators.packing``:
-  range-partition by (count desc, token asc), ``row_number`` WITHIN
-  each range partition, then offset by a driver prefix sum over the
-  ``n_parts`` per-partition row counts (bounded scalars). The result
-  is identical for any partition boundaries — offsets cancel the
-  arbitrariness. With ``max_size`` set, each partition additionally
+  own ``operators.util`` warns against). The id is a running count
+  of rows in (count desc, token asc) order, computed by
+  ``prefixsum.running_sum`` (the two-pass distributed prefix sum;
+  see there). With ``max_size`` set, each partition additionally
   pre-prunes to its local top-``max_size`` BEFORE the range shuffle
   (a row outside its partition's top-``max_size`` by (count, token)
   can never make the global top-``max_size``), bounding shuffle
@@ -42,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .materialize import materialize
+from .prefixsum import running_sum
 from .textstats import tokens
 
 
@@ -91,25 +89,13 @@ def build_vocab(
             .where(F.col("_lr") <= max_size)
             .drop("_lr")
         )
-    parts = counts.repartitionByRange(n_parts, *order).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    wp = Window.partitionBy("_pid").orderBy(*order)
-    local = parts.withColumn("_lrank", F.row_number().over(wp))
-    sizes = (
-        local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_c")).orderBy("_pid").collect()
-    )
-    acc = 0
-    offsets = []
-    for r in sizes:
-        offsets.append((r["_pid"], acc))
-        acc += r["_c"]
-    off = local.sparkSession.createDataFrame(
-        offsets or [(0, 0)], "_pid int, _offset bigint"
-    )
-    vocab = local.join(F.broadcast(off), "_pid").withColumn(
-        "token_id", (F.col("_offset") + F.col("_lrank") - 1).cast("int")
-    )
+    vocab = running_sum(
+        counts.withColumns({"_neg": -F.col("count"), "_one": F.lit(1)}),
+        ["_neg", "token"],
+        "_one",
+        n_parts=n_parts,
+        out_col="token_id",
+    ).withColumn("token_id", (F.col("token_id") - 1).cast("int"))
     if max_size is not None:
         vocab = vocab.where(F.col("token_id") < max_size)
     return vocab.select("token", "token_id", "count")

@@ -113,6 +113,6 @@ def refresh_rollups(
         daily_delta = M.upsert(store.read(DAILY), daily_delta, _KEYS)
     commit(DAILY, daily_delta)
     return {
-        "hourly_rows": store.read(HOURLY).count(),
-        "daily_rows": store.read(DAILY).count(),
+        "hourly_rows": store.row_count(HOURLY),
+        "daily_rows": store.row_count(DAILY),
     }

@@ -434,10 +434,15 @@ class TableStore:
     def register_index(self, table: str, columns: list[str], kind: str = "btree") -> None:
         """D8 analogue: indexes become layout hints in properties
         (on a lakehouse: bucketBy/Z-ORDER); recorded, never failing
-        the load (reference policy, postgres/postgres.py:190-229)."""
+        the load (reference policy, postgres/postgres.py:190-229).
+        An entry already registered is skipped, so a repeated
+        truncate or append load with the same ``indexes`` commits
+        nothing new."""
         idx = self.properties(table).get("indexes", [])
-        idx.append({"columns": columns, "kind": kind})
-        self.set_properties(table, indexes=idx)
+        entry = {"columns": list(columns), "kind": kind}
+        if entry in idx:
+            return
+        self.set_properties(table, indexes=idx + [entry])
 
     def compact(self, table: str, target_partitions: int | None = None) -> int:
         """D9/OPTIMIZE analogue: rewrite the current version with a

@@ -432,6 +432,15 @@ def test_failed_drift_recreate_keeps_old_table(spark, tmp_path, staged_csv):
     assert out.count() == 5
 
 
+def test_repeated_truncate_load_registers_index_once(spark, tmp_path, staged_csv):
+    """A daily truncate load keeps the table's properties; registering
+    the same index again must not append a second copy."""
+    store = TableStore(spark, str(tmp_path / "wh"))
+    for _ in range(2):
+        P.load_pipeline(spark, staged_csv, SCHEMA, store, "pt", mode="truncate", indexes=[["objectid"]])
+    assert store.properties("pt")["indexes"] == [{"columns": ["objectid"], "kind": "btree"}]
+
+
 def test_failed_load_into_missing_table_leaves_it_absent(spark, tmp_path):
     store = TableStore(spark, str(tmp_path / "wh"))
     empty = tmp_path / "header_only.csv"
