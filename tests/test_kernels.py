@@ -25,12 +25,10 @@ def test_build_vocab_ids_equal_single_partition_rank(spark):
     counts): every id is dense and equals ``row_number() OVER (ORDER
     BY count DESC, token) - 1`` computed in one partition."""
     n_tokens = 26_700
-    words = F.transform(
-        F.sequence(F.lit(0), F.lit(4)),
-        lambda i: F.concat(
-            F.lit("t"), F.pmod(F.xxhash64(F.col("id"), i), F.lit(n_tokens)).cast("string")
-        ),
+    word = lambda i: F.concat(  # noqa: E731
+        F.lit("t"), F.pmod(F.xxhash64("id", i), F.lit(n_tokens)).cast("string")
     )
+    words = F.transform(F.sequence(F.lit(0), F.lit(4)), word)
     docs = spark.range(80_000).select(F.array_join(words, " ").alias("text"))
     got = sorted(tuple(r) for r in build_vocab(docs).collect())
 
