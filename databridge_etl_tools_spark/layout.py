@@ -23,6 +23,12 @@ Results are identical to the raw-parquet path by construction — the
 builders only reorganize bytes; the DuckDB oracle keeps reading raw
 parquet, so the correctness gate cross-checks the layouts too.
 
+The five builders (the three above, documents by language and the
+bucketed purchase-edge table) are independent: each reads raw sources
+only (``spark.read.parquet``, or ``registry.table`` after popping its
+own layout) and never a layout another builder registers, so
+:func:`build_all` runs them concurrently as jobs of one application.
+
 Builds are CACHED: each layout records its source file's
 (mtime, size) + build params in a ``_LAYOUT_META.json`` marker; a
 rebuild with an unchanged source re-registers the existing copy
@@ -291,11 +297,25 @@ def build_purchase_edges(
 def build_all(spark: SparkSession, sf_dir: str, out_dir: str | None = None) -> None:
     """Build (or reuse) every layout for ``sf_dir`` (bench/startup
     hook). ``out_dir`` defaults to a stable per-SF scratch dir so
-    repeated invocations rebuild nothing when sources are unchanged."""
+    repeated invocations rebuild nothing when sources are unchanged.
+
+    The builders are independent, so they run concurrently through
+    ``util.in_parallel``: their jobs overlap in one application and
+    the build takes about as long as its slowest builder. Each builder
+    reads raw sources only, never a layout another builder registers,
+    and changes no session conf another builder's results depend on
+    (the events read sets ``nanosAsLong``, which touches only
+    TIMESTAMP(NANOS) columns, and only events has one); a new builder
+    must keep both rules. Every builder finishes before the first
+    failure, in argument order, propagates."""
+    from .operators.util import in_parallel
+
     out = out_dir or default_out_dir(sf_dir)
     os.makedirs(out, exist_ok=True)
-    build_bucketed_facts(spark, sf_dir)
-    build_events_by_day(spark, sf_dir, out)
-    build_embeddings_by_cell(spark, sf_dir, out)
-    build_documents_by_lang(spark, sf_dir, out)
-    build_purchase_edges(spark, sf_dir)
+    in_parallel(
+        lambda: build_bucketed_facts(spark, sf_dir),
+        lambda: build_events_by_day(spark, sf_dir, out),
+        lambda: build_embeddings_by_cell(spark, sf_dir, out),
+        lambda: build_documents_by_lang(spark, sf_dir, out),
+        lambda: build_purchase_edges(spark, sf_dir),
+    )

@@ -109,6 +109,23 @@ def _np_result_df(spark, fields):
     return spark.createDataFrame(pdf, schema)
 
 
+def _triangles_np_df(spark, node_t, src, dst):
+    """``(node, n_triangles)`` from ``graph_np.triangle_counts_np``
+    on a deduplicated, self-loop-free, both-directions edge list, or
+    None past the wedge-volume guard."""
+    from pyspark.sql import types as T
+
+    from . import graph_np
+
+    try:
+        nd, tv = graph_np.triangle_counts_np(src, dst)
+    except graph_np.NpOverflow:
+        return None
+    return _np_result_df(
+        spark, [("node", node_t, nd), ("n_triangles", T.LongType(), tv)]
+    )
+
+
 def pagerank(
     edges: DataFrame,
     *,
@@ -852,23 +869,15 @@ def triangle_counts(
     # the wedge-volume budget; operators.graph_np)
     arrays = _driver_route_arrays(raw, ["_src", "_dst"])
     if arrays is not None:
-        from pyspark.sql import types as T
-
         from . import graph_np
 
-        try:
-            s_a, d_a = graph_np.dedup_pairs(arrays[0], arrays[1])
-            nd, tv = graph_np.triangle_counts_np(s_a, d_a)
-        except graph_np.NpOverflow:
-            pass
-        else:
-            return _np_result_df(
-                raw.sparkSession,
-                [
-                    ("node", raw.schema["_src"].dataType, nd),
-                    ("n_triangles", T.LongType(), tv),
-                ],
-            )
+        out = _triangles_np_df(
+            raw.sparkSession,
+            raw.schema["_src"].dataType,
+            *graph_np.dedup_pairs(arrays[0], arrays[1]),
+        )
+        if out is not None:
+            return out
     e = materialize(raw.distinct())
     deg = e.groupBy(F.col("_src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")
@@ -1242,26 +1251,75 @@ def shared_item_pairs(
     same pairs on the collected arrays
     (``graph_np.shared_item_pairs_np``, same pair-volume guard as
     the wedge route)."""
+    raw = _item_members(df, item_col, member_col)
+    pairs = _shared_pairs_np(raw, min_shared)
+    if pairs is not None:
+        return _pairs_df(raw, pairs)
+    return _shared_pairs_dist(raw, min_shared)
+
+
+def shared_item_triangles(
+    df: DataFrame,
+    item_col: str,
+    member_col: str,
+    *,
+    min_shared: int,
+) -> DataFrame:
+    """:func:`triangle_counts` over the :func:`shared_item_pairs`
+    graph (both directions of every pair): ``(node, n_triangles)``.
+    When the pairs take the driver route and both directions fit the
+    graph budget, the triangles are counted on the same arrays
+    (``graph_np.triangle_counts_np``) instead of sending the pairs
+    back through Spark to be collected again."""
+    raw = _item_members(df, item_col, member_col)
+    pairs = _shared_pairs_np(raw, min_shared)
+    if pairs is not None and 2 * len(pairs[0]) <= route.budget("graph"):
+        import numpy as np
+
+        a, b = pairs
+        out = _triangles_np_df(
+            raw.sparkSession,
+            raw.schema["_m"].dataType,
+            np.concatenate([a, b]),
+            np.concatenate([b, a]),
+        )
+        if out is not None:
+            return out
+    co = _shared_pairs_dist(raw, min_shared) if pairs is None else _pairs_df(raw, pairs)
+    edges = co.select(
+        F.col("a").alias("src"), F.col("b").alias("dst")
+    ).unionByName(co.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+    return triangle_counts(edges)
+
+
+def _item_members(df: DataFrame, item_col: str, member_col: str) -> DataFrame:
+    return df.select(F.col(item_col).alias("_i"), F.col(member_col).alias("_m"))
+
+
+def _shared_pairs_np(raw: DataFrame, min_shared: int):
+    """The routed pairs as ``(a, b)`` numpy arrays, or None (over the
+    graph budget, NULLs, an abort, or past the pair-volume guard)."""
+    arrays = _driver_route_arrays(raw, ["_i", "_m"])
+    if arrays is None:
+        return None
+    from . import graph_np
+
+    try:
+        return graph_np.shared_item_pairs_np(
+            arrays[0], arrays[1], min_shared=min_shared
+        )
+    except graph_np.NpOverflow:
+        return None
+
+
+def _pairs_df(raw: DataFrame, pairs) -> DataFrame:
+    m_t = raw.schema["_m"].dataType
+    return _np_result_df(raw.sparkSession, [("a", m_t, pairs[0]), ("b", m_t, pairs[1])])
+
+
+def _shared_pairs_dist(raw: DataFrame, min_shared: int) -> DataFrame:
     from .materialize import materialize
 
-    raw = df.select(
-        F.col(item_col).alias("_i"), F.col(member_col).alias("_m")
-    )
-    arrays = _driver_route_arrays(raw, ["_i", "_m"])
-    if arrays is not None:
-        from . import graph_np
-
-        try:
-            a, b = graph_np.shared_item_pairs_np(
-                arrays[0], arrays[1], min_shared=min_shared
-            )
-        except graph_np.NpOverflow:
-            pass
-        else:
-            m_t = raw.schema["_m"].dataType
-            return _np_result_df(
-                raw.sparkSession, [("a", m_t, a), ("b", m_t, b)]
-            )
     cp = materialize(raw.distinct())
     x, y = cp.alias("x"), cp.alias("y")
     return (

@@ -60,11 +60,15 @@ def user_sequences(
     )
 
 
-def dense_index(df: DataFrame, id_col: str = "doc_id", n_parts: int = 32) -> DataFrame:
+def dense_index(
+    df: DataFrame, id_col: str = "doc_id", n_parts: int | None = None
+) -> DataFrame:
     """Dense 0..N-1 row index in ``id_col`` order — a running count
     (``prefixsum.running_sum`` over a constant 1, minus 1), never a
     global single-partition window. Returns the input keys plus
-    ``row_index BIGINT``."""
+    ``row_index BIGINT``. ``n_parts`` defaults to
+    ``prefixsum.derived_range_partitions``; the index does not depend
+    on it."""
     (c_one,) = internal_names(df, "one")
     out = running_sum(
         df.withColumn(c_one, F.lit(1)), [id_col], c_one, n_parts=n_parts,

@@ -62,13 +62,15 @@ def build_vocab(
     *,
     min_count: int = 1,
     max_size: int | None = None,
-    n_parts: int = 32,
+    n_parts: int | None = None,
     tokens_df: DataFrame | None = None,
 ) -> DataFrame:
     """Frequency-ranked vocabulary: ``(token, token_id, count)`` with
     ``token_id`` dense from 0 in (count desc, token asc) order.
     Pass ``tokens_df`` (from :func:`tokenize_corpus`) to reuse an
-    existing tokenization pass."""
+    existing tokenization pass. ``n_parts`` defaults to
+    ``prefixsum.derived_range_partitions``; the ids do not depend on
+    it."""
     if tokens_df is not None:
         base = tokens_df
     elif docs is not None:

@@ -168,8 +168,9 @@ def load_pipeline(
 ) -> LoadResult:
     """S3-CSV → table load (postgres load, §3.1): schema-driven create
     with drift handling, prepare transforms, geometry precheck before
-    the destructive step, atomic write, count parity, index + analyze
-    post-hooks."""
+    the destructive step, atomic write (its commit records the analyze
+    row count), count parity, index post-hook. A load without
+    ``indexes`` commits one manifest flip."""
     if mode not in ("truncate", "append", "rename_replace"):
         raise ValueError(f"unknown load mode: {mode!r}")
     declared_cols = [f.name for f in schema.struct.fields]
@@ -216,7 +217,6 @@ def load_pipeline(
 
     for cols in indexes or []:
         store.register_index(table, cols)
-    store.analyze(table)
     qa.raise_if_failed()
     return LoadResult(rows_loaded=n_in, recreated=recreated, qa=qa)
 

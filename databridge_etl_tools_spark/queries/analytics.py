@@ -3251,7 +3251,7 @@ def _triangles_oracle(min_shared: int = 4, k: int = 20) -> str:
 
 @query("graph_triangles_copurchase", oracle=_triangles_oracle(), gate=False)
 def graph_triangles_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRIANGLE COUNTS (``operators.graph.triangle_counts``, the graph
+    """TRIANGLE COUNTS (``operators.graph.shared_item_triangles``, the graph
     family's seventh member): local clustering over the customer
     co-purchase graph — customers sharing ≥ 4 distinct parts — where
     a triangle-dense neighborhood marks a tightly-clustered buying
@@ -3265,7 +3265,7 @@ def graph_triangles_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers by triangle membership."""
     from pyspark.sql import Window
 
-    from ..operators.graph import shared_item_pairs, triangle_counts
+    from ..operators.graph import shared_item_triangles
 
     ord_ = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -3273,8 +3273,9 @@ def graph_triangles_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared_item_pairs operator (distributed: materialized distinct
     # (part, customer) + part-keyed self-join + count >= 4, the exact
     # plan this query used to inline; driver-routed under the edge
-    # budget — r14, the join was 2.7 s of the query's 4 s at sf0.1)
-    co = shared_item_pairs(
+    # budget — r14, the join was 2.7 s of the query's 4 s at sf0.1),
+    # whose routed pairs go straight to the numpy triangle count
+    counts = shared_item_triangles(
         ord_.join(li, ord_["o_orderkey"] == li["l_orderkey"]).select(
             F.col("l_partkey").alias("p"), F.col("o_custkey").alias("c")
         ),
@@ -3282,10 +3283,6 @@ def graph_triangles_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c",
         min_shared=4,
     )
-    edges = co.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(co.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    counts = triangle_counts(edges)
     w = Window.orderBy(F.desc("n_triangles"), F.asc("c_custkey"))
     return (
         counts.select(F.col("node").alias("c_custkey"), "n_triangles")

@@ -298,7 +298,10 @@ class TableStore:
           schema in the same flip (D1: a drifted table is dropped, all
           but the new segment, and its commit log restarts); else with
           ``append`` the segment joins the live list; else it replaces
-          the state. Returns True.
+          the state. The flip also records the committed state's
+          ``rowcount`` (the :meth:`analyze` statistic, from parquet
+          footers), so a load needs no second commit for it. Returns
+          True.
         - ``check()`` returns False: the segment is deleted and nothing
           is committed; the caller redoes the write. Returns False.
         - ``check()`` raises: nothing is committed — manifest, commit
@@ -319,15 +322,16 @@ class TableStore:
         if not ok:
             self._discard(table, v)
             return False
+        rows = self._segment_rows(table, v)
         if create is not None:
-            props = _create_args(create)[1]
             if existed:
                 self._clear(table, keep=v)
-            self._flip(table, v, props, schema)
+            self._flip(table, v, {**_create_args(create)[1], "rowcount": rows}, schema)
         elif append:
-            self._flip(table, self._segments(table) + [v], schema=schema)
+            rows += self.row_count(table)
+            self._flip(table, self._segments(table) + [v], {"rowcount": rows}, schema)
         else:
-            self._flip(table, v, None, schema)
+            self._flip(table, v, {"rowcount": rows}, schema)
         return True
 
     def _discard(self, table: str, version: str) -> None:

@@ -264,3 +264,38 @@ def test_shared_item_pairs_parity_real(spark):
         None, lambda: G.shared_item_pairs(cp, "p", "c", min_shared=2)
     )
     assert dist == routed
+
+
+def test_shared_item_triangles_parity_one_collect(spark, monkeypatch):
+    """Triangles over the shared-item graph: routed == distributed ==
+    triangle_counts over shared_item_pairs, and the routed pairs feed
+    the numpy count directly — one bounded collect, not two."""
+    from databridge_etl_tools_spark.operators import route
+
+    # members 10, 11, 12 pairwise share items 1 and 2 (one triangle);
+    # 13 shares two items with 10 only
+    rows = [(1, 10), (1, 11), (1, 12), (2, 10), (2, 11), (2, 12),
+            (3, 10), (3, 13), (4, 10), (4, 13), (5, 11)]
+    df = spark.createDataFrame(rows, "p long, c long")
+
+    def via_pairs():
+        co = G.shared_item_pairs(df, "p", "c", min_shared=2)
+        return G.triangle_counts(
+            co.selectExpr("a as src", "b as dst").unionByName(
+                co.selectExpr("b as src", "a as dst")
+            )
+        )
+
+    dist, routed = _both(
+        None, lambda: G.shared_item_triangles(df, "p", "c", min_shared=2)
+    )
+    assert dist == routed == sorted(map(tuple, via_pairs().collect()))
+    assert routed == [(10, 1), (11, 1), (12, 1), (13, 0)]
+
+    calls = []
+    real = route.collect_bounded
+    monkeypatch.setattr(
+        route, "collect_bounded", lambda *a: calls.append(1) or real(*a)
+    )
+    G.shared_item_triangles(df, "p", "c", min_shared=2).collect()
+    assert len(calls) == 1

@@ -5,6 +5,11 @@ pruning, and (b) results are identical to the raw-parquet path."""
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -248,3 +253,141 @@ def _raw_purchase_ranks(spark):
         )
     )
     return pagerank(edges, iters=8)
+
+
+# -- build_all: the five builders run concurrently ---------------------
+
+BUILDERS = (
+    "build_bucketed_facts",
+    "build_events_by_day",
+    "build_embeddings_by_cell",
+    "build_documents_by_lang",
+    "build_purchase_edges",
+)
+
+
+def _bucketed_tables():
+    tok = layout._token(SF)
+    return [f"{t}_bkt_{tok}" for t in ("lineitem", "orders", "purchase_edges")]
+
+
+def _forget_layouts(spark, wipe=False):
+    """Clear the registry and the catalog entries of the bucketed
+    tables (a fresh session); ``wipe`` also deletes their files, so
+    the next build writes instead of reusing."""
+    registry.clear_layouts()
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    for t in _bucketed_tables():
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        if wipe:
+            shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
+
+
+def _layout_snapshot(spark):
+    """{layout key: (kind, sorted row reprs)} of every registered layout."""
+    return {
+        key: (kind, sorted(repr(tuple(r)) for r in provider(spark).collect()))
+        for key, (provider, kind) in registry.LAYOUT.items()
+    }
+
+
+def _files_mtimes(*roots):
+    files = sorted(
+        f for r in roots for f in glob.glob(f"{r}/**/*", recursive=True)
+        if os.path.isfile(f)
+    )
+    return {f: os.path.getmtime(f) for f in files}
+
+
+def test_build_all_equals_builders_one_at_a_time(spark, tmp_path):
+    _forget_layouts(spark, wipe=True)
+    try:
+        seq_out = str(tmp_path / "seq")
+        layout.build_bucketed_facts(spark, SF)
+        layout.build_events_by_day(spark, SF, seq_out)
+        layout.build_embeddings_by_cell(spark, SF, seq_out)
+        layout.build_documents_by_lang(spark, SF, seq_out)
+        layout.build_purchase_edges(spark, SF)
+        want = _layout_snapshot(spark)
+
+        _forget_layouts(spark, wipe=True)
+        layout.build_all(spark, SF, str(tmp_path / "par"))
+        got = _layout_snapshot(spark)
+        assert sorted(got) == sorted(want)
+        assert {k for k, _ in got} == {SF}
+        assert {k[1] for k in got} == {
+            "lineitem", "orders", "events", "embeddings", "documents",
+            "purchase_edges",
+        }
+        for key in want:
+            assert got[key][0] == want[key][0], key
+            assert got[key][1] == want[key][1], f"{key} rows differ"
+    finally:
+        _forget_layouts(spark)
+
+
+def test_build_all_raises_after_other_builders_return(spark, tmp_path, monkeypatch):
+    returned = []
+
+    class Boom(RuntimeError):
+        pass
+
+    def boom(*a, **k):
+        raise Boom("embeddings builder failed")
+
+    for name in BUILDERS:
+        if name == "build_embeddings_by_cell":
+            monkeypatch.setattr(layout, name, boom)
+            continue
+
+        def wrapped(*a, _real=getattr(layout, name), _name=name, **k):
+            time.sleep(0.5)  # still running when the failure is raised
+            out = _real(*a, **k)
+            returned.append(_name)
+            return out
+
+        monkeypatch.setattr(layout, name, wrapped)
+    try:
+        with pytest.raises(Boom, match="embeddings builder failed"):
+            layout.build_all(spark, SF, str(tmp_path))
+        assert sorted(returned) == sorted(set(BUILDERS) - {"build_embeddings_by_cell"})
+    finally:
+        _forget_layouts(spark)
+
+
+def test_build_all_jobs_carry_caller_job_group(spark, tmp_path):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "layout-build-all-test"
+    _forget_layouts(spark, wipe=True)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "build_all under a caller job group")
+    try:
+        layout.build_all(spark, SF, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        _forget_layouts(spark)
+    # every builder wrote, each with at least one job, all in the group
+    assert len(tracker.getJobIdsForGroup(group)) >= len(BUILDERS)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_build_all_cached_rebuild_writes_nothing(spark, tmp_path):
+    out = str(tmp_path / "layout")
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    locs = [f"{wh}/{t}" for t in _bucketed_tables()]
+    _forget_layouts(spark, wipe=True)
+    try:
+        layout.build_all(spark, SF, out)
+        first = set(registry.LAYOUT)
+        mtimes = _files_mtimes(out, *locs)
+        assert mtimes
+
+        _forget_layouts(spark)  # a fresh session: registry and catalog empty
+        layout.build_all(spark, SF, out)
+        assert set(registry.LAYOUT) == first and len(first) == 6
+        assert all(spark.catalog.tableExists(t) for t in _bucketed_tables())
+        assert _files_mtimes(out, *locs) == mtimes
+    finally:
+        _forget_layouts(spark)

@@ -516,3 +516,25 @@ def test_staged_pipelines_scan_input_once(spark, tmp_path, staged_csv):
         with _jobs_started(spark) as jobs:
             fn()
         assert len(jobs) <= most, f"{name} ran {len(jobs)} Spark jobs, at most {most} expected"
+
+
+def test_load_commits_one_flip_with_rowcount(spark, tmp_path, staged_csv):
+    """The analyze row count rides on the data flip: a load without
+    ``indexes`` adds exactly one commit-log entry, whether it creates,
+    truncates or appends, and ``rowcount`` equals the table's rows."""
+    store = TableStore(spark, str(tmp_path / "wh"))
+    log = os.path.join(store.root, "pt", "_commits.jsonl")
+
+    def entries():
+        with open(log) as f:
+            return len(f.readlines())
+
+    P.load_pipeline(spark, staged_csv, SCHEMA, store, "pt", mode="truncate")
+    assert entries() == 1
+    assert store.properties("pt")["rowcount"] == 5
+    P.load_pipeline(spark, staged_csv, SCHEMA, store, "pt", mode="truncate")
+    assert entries() == 2
+    assert store.properties("pt")["rowcount"] == 5
+    P.load_pipeline(spark, staged_csv, SCHEMA, store, "pt", mode="append")
+    assert entries() == 3
+    assert store.properties("pt")["rowcount"] == 10 == store.row_count("pt")
