@@ -9,6 +9,8 @@ function (SURVEY §2.7).
 
 from __future__ import annotations
 
+import string
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -70,6 +72,17 @@ def with_srid(col: Column | str, srid: Column | int) -> Column:
     return F.concat(F.lit("SRID="), s.cast("string"), F.lit(";"), c)
 
 
+def ascii_upper(c: Column) -> Column:
+    """Fold ASCII ``a-z`` to upper case, leave every other character.
+
+    Spark's ``upper`` initializes ICU's case-mapping classes on its
+    first use in a JVM (about 1 s); ``translate`` does not. WKT
+    keywords and type tokens are ASCII, and no non-ASCII character
+    upper-cases into E, M, P, T or Y, so a comparison with ``EMPTY``
+    reads the same either way."""
+    return F.translate(c, string.ascii_lowercase, string.ascii_uppercase)
+
+
 def geometry_kind(col: Column | str) -> Column:
     """F24: sniff the geometry type token from (E)WKT, uppercased,
     with Z/M suffix dropped (``POINT Z`` → ``POINT``).
@@ -79,9 +92,7 @@ def geometry_kind(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     tail = F.regexp_replace(c, r"^SRID=\d+;", "")
-    return F.upper(
-        F.regexp_extract(tail, r"^\s*([A-Za-z]+)", 1)
-    )
+    return ascii_upper(F.regexp_extract(tail, r"^\s*([A-Za-z]+)", 1))
 
 
 def repair_nan(col: Column | str) -> Column:
@@ -130,24 +141,22 @@ def promote_to_multi(col: Column | str, target_kind: Column | str | None = None)
     c = F.col(col) if isinstance(col, str) else col
     prefix = F.coalesce(F.regexp_extract(c, r"^(SRID=\d+;)", 1), F.lit(""))
     tail = F.regexp_replace(c, r"^SRID=\d+;", "")
-    kind = F.upper(F.regexp_extract(tail, r"^\s*([A-Za-z]+)", 1))
+    kind = ascii_upper(F.regexp_extract(tail, r"^\s*([A-Za-z]+)", 1))
 
     def wrapped(single: str, multi: str) -> Column:
         body = F.trim(F.regexp_replace(tail, r"(?i)^\s*" + single, ""))
         return F.when(
-            F.upper(F.trim(body)) == "EMPTY", F.concat(F.lit(multi), F.lit(" EMPTY"))
+            ascii_upper(F.trim(body)) == "EMPTY", F.concat(F.lit(multi), F.lit(" EMPTY"))
         ).otherwise(F.concat(F.lit(multi), F.lit("("), F.trim(body), F.lit(")")))
 
     out = tail
     for single, multi in MULTI_PROMOTION.items():
         cond = kind == single
-        if target_kind is not None:
-            tk = (
-                F.lit(target_kind).cast("string")
-                if isinstance(target_kind, str)
-                else target_kind
-            )
-            cond = cond & (F.upper(tk) == multi)
+        if isinstance(target_kind, str):
+            if target_kind.upper() != multi:
+                continue
+        elif target_kind is not None:
+            cond = cond & (F.upper(target_kind) == multi)
         out = F.when(cond, wrapped(single, multi)).otherwise(out)
     return F.concat(prefix, out)
 

@@ -334,7 +334,8 @@ def bpe_fit_words(
         )
         merges, units = _fit_words_py(rows, n_merges, min_count, sep)
         fdict = dict(rows)
-        final = docs.sparkSession.createDataFrame(
+        final = route.driver_frame(
+            docs.sparkSession,
             [(w, fdict[w], t) for w, t in units.items()],
             "w string, freq bigint, _toks array<string>",
         )

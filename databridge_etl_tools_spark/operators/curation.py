@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import route
 from . import textstats as TS
 from .materialize import materialize
 
@@ -228,7 +229,8 @@ def curation_finalize(
             )
         )
         bnds = equi_depth_boundaries_by(knd, "pred_lang", "ppl_q", 3)
-        bounds = spark.createDataFrame(
+        bounds = route.driver_frame(
+            spark,
             [(grp[0], int(bs[1])) for grp, bs in bnds.items()],
             "pred_lang string, _b2 bigint",
         )
@@ -311,7 +313,8 @@ def curation_finalize(
             },
         )
         thr = {grp[0]: int(ks[alloc[grp[0]]]) for grp, ks in vals.items()}
-    meta = spark.createDataFrame(
+    meta = route.driver_frame(
+        spark,
         [(s, weights[s], alloc[s], thr.get(s)) for s in sources],
         "source string, rank_q long, alloc long, _thr long",
     )

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
+from . import route
+
 MODEL_SCHEMA = T.StructType(
     [
         T.StructField("name", T.StringType()),
@@ -71,7 +73,7 @@ def save_models(
     if isinstance(models, dict):
         models = [models]
     spark = store.spark
-    new = spark.createDataFrame(_rows(name, models), MODEL_SCHEMA)
+    new = route.driver_frame(spark, _rows(name, models), MODEL_SCHEMA)
     if store.exists(table):
         from pyspark.sql import functions as F
 

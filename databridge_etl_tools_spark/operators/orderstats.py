@@ -117,7 +117,7 @@ def _ranges_df(spark, rows, gfields, vtype):
         + [T.StructField(f.name, f.dataType) for f in gfields]
         + [T.StructField("_lo", vtype), T.StructField("_hi", vtype)]
     )
-    return spark.createDataFrame(rows, schema)
+    return route.driver_frame(spark, rows, schema)
 
 
 def _join_ranges(
@@ -260,8 +260,8 @@ def _resolve_exact_by(vals, gcols, resolve, spark, gfields, vtype, weighted):
                 .collect()
             )
         else:
-            pdf = spark.createDataFrame(
-                [(rid, rank) for rid, rank in picks], "_rid int, _rn bigint"
+            pdf = route.driver_frame(
+                spark, [(rid, rank) for rid, rank in picks], "_rid int, _rn bigint"
             )
             hits = (
                 left.join(
@@ -286,8 +286,8 @@ def _resolve_exact_by(vals, gcols, resolve, spark, gfields, vtype, weighted):
                 cond = c if cond is None else (cond | c)
             hits = ranked.where(cond).collect()
         else:
-            pdf = spark.createDataFrame(
-                [(rid, rank) for rid, rank in picks], "_rid int, _rn bigint"
+            pdf = route.driver_frame(
+                spark, [(rid, rank) for rid, rank in picks], "_rid int, _rn bigint"
             )
             hits = ranked.join(F.broadcast(pdf), ["_rid", "_rn"]).collect()
     out: dict[tuple, dict] = {}

@@ -50,15 +50,45 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import route
+
 
 def derived_range_partitions(df: DataFrame) -> int:
     """Default range-partition count for two-pass prefix sums:
     ``max(input partitions, spark.sql.shuffle.partitions)``. Tracks
     cluster sizing instead of a hard constant — the input partition
     count scales with data volume (parquet splits), the shuffle conf
-    with cluster width."""
+    with cluster width.
+
+    Runs no Spark job. Under AQE ``df.rdd.getNumPartitions()`` executes
+    the input's shuffle stages to settle their coalesced count, so an
+    adaptive plan is read before execution instead
+    (:func:`_planned_partitions`): a shuffle's count before coalescing,
+    which is at least the count AQE settles on."""
     shuffle_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    return max(df.rdd.getNumPartitions(), shuffle_parts, 1)
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        n = _planned_partitions(plan.inputPlan())
+    else:
+        n = df.rdd.getNumPartitions()
+    return max(n, shuffle_parts, 1)
+
+
+def _planned_partitions(plan) -> int:
+    """Partition count of an unexecuted physical plan: the count its
+    partitioning declares (every exchange declares one), else the sum
+    over a union's children or the largest child's. A leaf that
+    declares none (a file or RDD scan) is asked for its RDD, which
+    lists files but runs no job; one holding a subquery (dynamic
+    partition pruning) would run it, and counts 0."""
+    n = plan.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    kids = plan.children()
+    counts = [_planned_partitions(kids.apply(i)) for i in range(kids.size())]
+    if not counts:
+        return plan.execute().getNumPartitions() if plan.subqueries().isEmpty() else 0
+    return sum(counts) if plan.nodeName() == "Union" else max(counts)
 
 
 def internal_names(df: DataFrame, *stems: str) -> "list[str]":
@@ -122,8 +152,8 @@ def running_sum(
     for r in totals:
         offsets.append((int(r[c_pid]), acc))
         acc += int(r["_total"])
-    off_df = local.sparkSession.createDataFrame(
-        offsets, f"{c_pid} int, {c_off} bigint"
+    off_df = route.driver_frame(
+        local.sparkSession, offsets, f"{c_pid} int, {c_off} bigint"
     )
     return (
         local.join(F.broadcast(off_df), c_pid)

@@ -9,10 +9,15 @@ runs untouched — at 100 TB an edge table, value column or vocabulary
 must never land on the driver.
 
 This module is the whole mechanism: the per-route budget table, the
-guarded collect and the Arrow→numpy decoding with its generic
-refusals (NULLs, NULL vector elements, ragged vectors). Refusals that
-belong to one operator's semantics (id types, zero norms, zero-length
-or non-finite vectors, NULL group keys) stay at that operator.
+guarded collect, the Arrow→numpy decoding with its generic refusals
+(NULLs, NULL vector elements, ragged vectors) and the way back in
+(:func:`driver_frame`). Refusals that belong to one operator's
+semantics (id types, zero norms, zero-length or non-finite vectors,
+NULL group keys) stay at that operator.
+
+Arrow is the crossing both ways: results leave through ``toArrow``
+and driver-side rows re-enter as a ``pyarrow.Table``, so no routed
+query starts a Python worker.
 """
 
 from __future__ import annotations
@@ -81,6 +86,60 @@ def collect_bounded(df, budget: int):
             return None
         raise
     return None if tbl.num_rows > budget else tbl
+
+
+def driver_frame(spark, rows, schema):
+    """``spark.createDataFrame(rows, schema)`` for driver-side rows
+    (tuples, lists, dicts or ``Row``s), built from a ``pyarrow.Table``.
+
+    The list path pickles the rows into a ``PythonRDD`` that Python
+    workers re-serialize every time the frame runs (the first one in a
+    process also starts the worker daemon). An Arrow table is handed to
+    the JVM as record batches: below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB) it
+    becomes a ``LocalRelation``, above it an RDD of the batches; either
+    way no Python worker runs.
+
+    The list path's semantics are kept: every row passes the same type
+    verifier (a wrong type, an int out of range, a NULL in a
+    non-nullable field or a wrong row width raises), and values cross
+    in their internal form, so a naive ``datetime`` is local time for
+    ``timestamp`` and wall-clock time for ``timestamp_ntz``, and a
+    top-level decimal is rounded half-up to its scale as the JVM does.
+    The table holds ``defaultParallelism`` slices, the list path's
+    ``parallelize`` split; empty slices are dropped, because a
+    zero-row batch ends the JVM's read of the stream there (rows after
+    it are lost)."""
+    import decimal
+
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    verify = T._make_type_verifier(schema)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(schema.toInternal(row))
+    cols = list(zip(*internal)) if internal else [()] * len(schema.fields)
+    ctx = decimal.Context(prec=38, rounding=decimal.ROUND_HALF_UP)
+    for i, f in enumerate(schema.fields):
+        if isinstance(f.dataType, T.DecimalType):
+            q = decimal.Decimal(1).scaleb(-f.dataType.scale)
+            cols[i] = [None if v is None else v.quantize(q, context=ctx) for v in cols[i]]
+    arrow_schema = to_arrow_schema(schema)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(c, type=af.type) for c, af in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    n, p = batch.num_rows, spark.sparkContext.defaultParallelism
+    cuts = [i * n // p for i in range(p + 1)]
+    slices = [batch.slice(lo, hi - lo) for lo, hi in zip(cuts, cuts[1:]) if hi > lo]
+    # no rows: one empty batch, as pyspark cannot re-chunk a nested
+    # column that has no chunks
+    return spark.createDataFrame(pa.Table.from_batches(slices or [batch]), schema)
 
 
 def columns(tbl, names):

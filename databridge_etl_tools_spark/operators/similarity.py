@@ -294,7 +294,8 @@ def neardup_pairs(
     b = base.select(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"), F.col("_norm").alias("_nb")
     ).withColumn("_gb", F.pmod(F.col("id_b").cast("bigint"), F.lit(n_blocks)).cast("int"))
-    block_pairs = emb.sparkSession.createDataFrame(
+    block_pairs = route.driver_frame(
+        emb.sparkSession,
         [(ga, gb) for ga in range(n_blocks) for gb in range(ga, n_blocks)],
         "bga int, bgb int",
     )
@@ -1512,8 +1513,8 @@ def kcenter_greedy(
             i = int(np.argmax(mind))
             chosen.append((t, int(ids_a[i]), int(mind[i])))
             mind = np.minimum(mind, ((q - q[i]) ** 2).sum(axis=1))
-        return df.sparkSession.createDataFrame(
-            chosen, f"sel_round int, {id_col} long, mind_q long"
+        return route.driver_frame(
+            df.sparkSession, chosen, f"sel_round int, {id_col} long, mind_q long"
         )
     qv = F.transform(
         F.col(vec_col),
@@ -1546,6 +1547,6 @@ def kcenter_greedy(
             "_mind", F.least(F.col("_mind"), dist_to(list(row["_qv"])))
         )
     spark = df.sparkSession
-    return spark.createDataFrame(
-        chosen, f"sel_round int, {id_col} long, mind_q long"
+    return route.driver_frame(
+        spark, chosen, f"sel_round int, {id_col} long, mind_q long"
     )

@@ -147,6 +147,11 @@ def encode_documents(
     v = materialize(vocab.select("token", "token_id"))
     if v.agg(F.count(F.lit(1))).collect()[0][0] <= broadcast_threshold:
         v = F.broadcast(v)
+    else:
+        # the count is exact: a small planner estimate (the prefix
+        # sum's offsets are a LocalRelation) must not broadcast a
+        # vocabulary counted past the threshold
+        v = v.hint("shuffle_merge")
     joined = ex.join(v, "token", "left").select(
         id_col,
         "pos",

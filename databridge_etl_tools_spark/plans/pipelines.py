@@ -35,6 +35,7 @@ from ..functions import datetimes as DTF
 from ..functions import geometry as G
 from ..functions.text import normalize_headers
 from ..operators import merge as M
+from ..operators import route
 from ..qa import QAReport
 from ..schema import TableSchema
 from ..sources.csv_io import LATIN1, REPLACEMENT_CHAR, read_csv, replacement_flag, write_csv
@@ -547,14 +548,7 @@ def incremental_dedup_pipeline(
     if store.exists(table):
         sigs = store.read(table)
     else:
-        sigs = spark.createDataFrame(
-            [], T.StructType(
-                [
-                    T.StructField("doc", T.LongType()),
-                    T.StructField("sig", T.ArrayType(T.LongType())),
-                ]
-            )
-        )
+        sigs = route.driver_frame(spark, [], "doc bigint, sig array<bigint>")
     from ..operators.dedup import incremental_minhash_dedup
 
     status = incremental_minhash_dedup(

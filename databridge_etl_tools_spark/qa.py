@@ -14,7 +14,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .functions.geometry import geometry_kind, srid_of
+from .functions.geometry import ascii_upper, geometry_kind, srid_of
 
 
 class QAError(AssertionError):
@@ -122,7 +122,7 @@ class QAReport:
         n_open = F.length(c) - F.length(F.replace(c, F.lit("("), F.lit("")))
         n_close = F.length(c) - F.length(F.replace(c, F.lit(")"), F.lit("")))
         well_formed = (
-            F.upper(F.trim(c)).endswith("EMPTY")
+            ascii_upper(F.trim(c)).endswith("EMPTY")
             | ((n_open > 0) & (n_open == n_close) & F.trim(c).endswith(")"))
         )
         rows = (

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators import route
 from ..operators.multimodal import binary_stats
 from ..registry import query, table
 from ..streaming.events import sessionize_batch
@@ -861,7 +862,8 @@ def mm_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             return bytes(base)
         return pack_ppm_random(24, 18, seed=i)
 
-    items = spark.createDataFrame(
+    items = route.driver_frame(
+        spark,
         [(int(r["doc_id"]), content(int(r["doc_id"]))) for r in rows],
         "item_id bigint, content binary",
     )
@@ -951,7 +953,8 @@ def mm_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             return bytes(base)
         return pack_fake_audio_random(8000, 488, seed=i)
 
-    items = spark.createDataFrame(
+    items = route.driver_frame(
+        spark,
         [(int(r["doc_id"]), content(int(r["doc_id"]))) for r in rows],
         "item_id bigint, content binary",
     )
@@ -1048,8 +1051,8 @@ def median_doc_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents", access="scan")
     n, med = exact_median(docs, "n_chars")
-    return spark.createDataFrame(
-        [(int(n), float(med))], "n_docs bigint, median_chars double"
+    return route.driver_frame(
+        spark, [(int(n), float(med))], "n_docs bigint, median_chars double"
     )
 
 
@@ -1222,8 +1225,8 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         sk = dv.select("hv").distinct().orderBy("hv").limit(64)
         nk, est = kmv_estimate(sk, k=64)
         rows.append((col, 64, int(n_exact), int(nk), float(est)))
-    return spark.createDataFrame(
-        rows, "col string, k int, n_exact bigint, n_sketch bigint, n_est double"
+    return route.driver_frame(
+        spark, rows, "col string, k int, n_exact bigint, n_sketch bigint, n_est double"
     )
 
 
@@ -1276,7 +1279,8 @@ def events_percentrank_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     vals, counts = kth_smallest_by(
         v, "event_type", "value", lambda n: [max(n - 4, 1)]
     )
-    thr = spark.createDataFrame(
+    thr = route.driver_frame(
+        spark,
         [(g[0], counts[g], vals[g][max(counts[g] - 4, 1)]) for g in counts],
         "event_type string, _n bigint, _thr double",
     )
@@ -1588,7 +1592,8 @@ def median_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events", access="scan")
     v = ev.where(F.col("value").isNotNull())
     meds = exact_median_by(v, "event_type", "value")
-    return spark.createDataFrame(
+    return route.driver_frame(
+        spark,
         [(g[0], n, med) for g, (n, med) in meds.items()],
         "event_type string, n bigint, median_value double",
     )
@@ -1651,7 +1656,8 @@ def events_value_trimmed_mean_by_type(spark: SparkSession, sf_dir: str) -> DataF
     vals, counts = kth_smallest_by(
         v, "event_type", "value", lambda n: {lo_rank(n), hi_rank(n)}
     )
-    thr = spark.createDataFrame(
+    thr = route.driver_frame(
+        spark,
         [
             (g[0], counts[g], vals[g][lo_rank(counts[g])], vals[g][hi_rank(counts[g])])
             for g in counts
@@ -1782,7 +1788,8 @@ def events_value_winsorized_by_type(spark: SparkSession, sf_dir: str) -> DataFra
     vals, counts = kth_smallest_by(
         v, "event_type", "value", lambda n: {lo_rank(n), hi_rank(n)}
     )
-    thr = spark.createDataFrame(
+    thr = route.driver_frame(
+        spark,
         [
             (g[0], counts[g], vals[g][lo_rank(counts[g])], vals[g][hi_rank(counts[g])])
             for g in counts
@@ -1856,7 +1863,8 @@ def events_value_mad_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     for g, n in counts.items():
         k1, k2 = (n + 1) // 2, n // 2 + 1
         meds[g] = (n, (float(got[g][k1]) + float(got[g][k2])) / 2.0)
-    meddf = spark.createDataFrame(
+    meddf = route.driver_frame(
+        spark,
         [(g[0], n, med) for g, (n, med) in meds.items()],
         "event_type string, n bigint, median_value double",
     )
@@ -1879,7 +1887,8 @@ def events_value_mad_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     for g, n in dcounts.items():
         k1, k2 = (n + 1) // 2, n // 2 + 1
         mads[g] = (n, (float(dgot[g][k1]) + float(dgot[g][k2])) / 2.0)
-    return spark.createDataFrame(
+    return route.driver_frame(
+        spark,
         [
             (g[0], meds[g][0], meds[g][1], mads[g][1])
             for g in meds
@@ -1973,7 +1982,8 @@ def length_deciles_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", access="scan")
     d = docs.where(F.col("n_chars").isNotNull())
     bnds = equi_depth_boundaries_by(d, "source", "n_chars", 10)
-    bounds = spark.createDataFrame(
+    bounds = route.driver_frame(
+        spark,
         [(g[0], [int(b) for b in bs]) for g, bs in bnds.items()],
         "source string, _b array<bigint>",
     )
@@ -2316,7 +2326,8 @@ def sketch_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         {(d,): {(n + 1) // 2, (95 * n + 99) // 100} for d, n in n_by_day.items()},
         stats={(d,): (gmin, int(gmax), n) for d, n in n_by_day.items()},
     )
-    exact = spark.createDataFrame(
+    exact = route.driver_frame(
+        spark,
         [
             (
                 d,
@@ -2475,7 +2486,8 @@ def max_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ts", F.struct((-F.col("c")).alias("_nc"), F.col("ts").alias("_t"))
         ).alias("peak_ts"),
     ).collect()[0]
-    return spark.createDataFrame(
+    return route.driver_frame(
+        spark,
         [(int(row["n_sessions"]), int(row["max_concurrent"]), row["peak_ts"])],
         "n_sessions bigint, max_concurrent bigint, peak_ts timestamp_ntz",
     )
@@ -2879,7 +2891,7 @@ def graph_bfs_supplier_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("supp_node").alias("src"), F.col("cust_node").alias("dst")
         )
     )
-    sources = spark.createDataFrame([(3,)], "node long")  # supplier #1
+    sources = route.driver_frame(spark, [(3,)], "node long")  # supplier #1
     # measured r10: serving this demo from the bucketed layout
     # (edges_ready — re-scan per hop instead of build+checkpoint) was
     # 3.7 vs 3.4 s raw at sf0.1: with only 4 hops the one-time build
@@ -3812,8 +3824,8 @@ def graph_harmonic_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("dst") * 8 + si).alias("dst"),
         )
         reps = r if reps is None else reps.unionByName(r)
-    sources = spark.createDataFrame(
-        [(int(s * 8 + si),) for si, s in enumerate(seeds)], "node long"
+    sources = route.driver_frame(
+        spark, [(int(s * 8 + si),) for si, s in enumerate(seeds)], "node long"
     )
     dist = bfs_distances(reps, sources, max_hops=3)
     per = dist.where(F.col("dist") > 0).select(

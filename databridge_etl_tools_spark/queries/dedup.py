@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as DD
+from ..operators import route
 from ..registry import query, table
 
 # shared DuckDB fragments ------------------------------------------------
@@ -898,7 +899,7 @@ def contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_total = toks.where(F.col("is_eval")).agg(
         F.count(F.lit(1)).cast("bigint").alias("eval_docs")
     )
-    ns = spark.createDataFrame([(3,), (5,), (7,)], "n int")
+    ns = route.driver_frame(spark, [(3,), (5,), (7,)], "n int")
     return (
         ns.join(F.broadcast(shared_cnt), "n", "left")
         .join(F.broadcast(cont), "n", "left")

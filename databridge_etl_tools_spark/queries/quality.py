@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import route
 from ..operators.materialize import materialize
 from ..registry import query, table
 from .similarity import _ridge_row_renorm, _tdiv_sql
@@ -534,7 +535,8 @@ def corpus_curation_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_pq_col(model).alias("pq"),
     )
     bnds = equi_depth_boundaries_by(kn, "lang", "ppl_q", 3)
-    bounds = spark.createDataFrame(
+    bounds = route.driver_frame(
+        spark,
         [(grp[0], int(bs[1])) for grp, bs in bnds.items()],
         "lang string, _b2 bigint",
     )
@@ -816,7 +818,8 @@ def corpus_curation_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
             },
         )
         thr = {grp[0]: int(ks[target[grp[0]]]) for grp, ks in vals.items()}
-    meta = spark.createDataFrame(
+    meta = route.driver_frame(
+        spark,
         [
             (s, weights[s], quotas[s], thr.get(s))
             for s in sources
@@ -1039,7 +1042,8 @@ def corpus_curation_v9(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     bnds = equi_depth_boundaries_by(kn, "pred_lang", "ppl_q", 3)
-    bounds = spark.createDataFrame(
+    bounds = route.driver_frame(
+        spark,
         [(grp[0], int(bs[1])) for grp, bs in bnds.items()],
         "pred_lang string, _b2 bigint",
     )

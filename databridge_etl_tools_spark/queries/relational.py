@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators import route
 from ..registry import query, table
 
 DEC2 = "decimal(38,2)"
@@ -424,7 +425,8 @@ def approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_extendedprice",
         lambda n: {max(1, (n * 45) // 100), max(1, (n * 55) // 100)},
     )
-    corridor = spark.createDataFrame(
+    corridor = route.driver_frame(
+        spark,
         [
             (
                 g[0],

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import route
 from ..operators import textstats as TS
 from ..registry import query, table
 
@@ -726,7 +727,8 @@ def sketch_vocabulary_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tokens",
         lambda n: {max(1, (n * 45) // 100), max(1, (n * 55) // 100)},
     )
-    stats = spark.createDataFrame(
+    stats = route.driver_frame(
+        spark,
         [
             (
                 g[0],
@@ -814,7 +816,8 @@ def token_weighted_median_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     vals, counts = kth_smallest_by(
         lens, "lang", "n_tokens", lambda W: {(W + 1) // 2}, weight_col="n_tokens"
     )
-    return spark.createDataFrame(
+    return route.driver_frame(
+        spark,
         [(g[0], counts[g], int(vals[g][(counts[g] + 1) // 2])) for g in counts],
         "lang string, total_tokens bigint, weighted_median_len bigint",
     )
@@ -1190,7 +1193,8 @@ def token_budget_shards_by_source(spark: SparkSession, sf_dir: str) -> DataFrame
     bnds = equi_depth_boundaries_by(
         lens, "source", "n_tokens", 4, weight_col="n_tokens"
     )
-    bounds = spark.createDataFrame(
+    bounds = route.driver_frame(
+        spark,
         [(g[0], [int(b) for b in bs]) for g, bs in bnds.items()],
         "source string, _b array<bigint>",
     )
@@ -1376,7 +1380,8 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.retrieval import bm25_topk
 
     docs = table(spark, sf_dir, "documents")
-    queries_df = spark.createDataFrame(
+    queries_df = route.driver_frame(
+        spark,
         [
             ("q_join", "hash merge join"),
             ("q_scan", "table scan fast"),
@@ -2268,7 +2273,8 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     merges, units = bpe_fit(docs, n_merges=8)
     n_after = units.agg(F.sum(F.size("_toks"))).collect()[0][0]
-    return spark.createDataFrame(
+    return route.driver_frame(
+        spark,
         [(s, a, b, c, int(n_after)) for s, a, b, c in merges],
         "step int, a string, b string, count bigint, corpus_units_after bigint",
     )
@@ -2311,7 +2317,8 @@ def bpe_learn_merges_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_after = words.agg(
         F.sum(F.col("freq") * F.size("_toks"))
     ).collect()[0][0]
-    return spark.createDataFrame(
+    return route.driver_frame(
+        spark,
         [(s, a, b, c, int(n_after)) for s, a, b, c in merges],
         "step int, a string, b string, count bigint, corpus_tokens_after bigint",
     )
@@ -2388,7 +2395,8 @@ def reranker_training_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.retrieval import bm25_topk
 
     docs = table(spark, sf_dir, "documents")
-    queries_df = spark.createDataFrame(
+    queries_df = route.driver_frame(
+        spark,
         [
             ("q_join", "hash merge join"),
             ("q_scan", "table scan fast"),
@@ -4100,7 +4108,8 @@ def text_ccnet_perplexity_buckets(
         )
     )
     bnds = equi_depth_boundaries_by(d, "lang", "pq", 3)
-    bounds = spark.createDataFrame(
+    bounds = route.driver_frame(
+        spark,
         [(g[0], [int(x) for x in bs]) for g, bs in bnds.items()],
         "lang string, _b array<bigint>",
     )
@@ -4610,8 +4619,8 @@ def quota_waterfall_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     caps = {r["source"]: int(r["cap"]) for r in rows}
     budget = sum(caps.values()) // 2
     alloc = capped_weighted_quotas(weights, caps, budget, rounds=8)
-    alloc_df = spark.createDataFrame(
-        [(s, int(a)) for s, a in alloc.items()], "source string, alloc long"
+    alloc_df = route.driver_frame(
+        spark, [(s, int(a)) for s, a in alloc.items()], "source string, alloc long"
     )
     return stats.join(F.broadcast(alloc_df), "source").select(
         "source", "weight_tokens", "cap", "alloc"

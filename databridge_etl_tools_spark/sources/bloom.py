@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import route
+
 #: bloom width in bits (2^17 = 16 KiB dense). At 16 bits/key
 #: (~8k keys/segment) the 4-lane false-positive rate is ~0.24%;
 #: saturation degrades pruning, never exactness.
@@ -106,7 +108,7 @@ def packed_lookup(
     rows = [
         (w, [b.get(w, 0) for b in blooms]) for w in range(WORDS)
     ]
-    return spark.createDataFrame(rows, "w long, words array<long>")
+    return route.driver_frame(spark, rows, "w long, words array<long>")
 
 
 def with_candidate_mask(

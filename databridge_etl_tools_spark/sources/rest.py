@@ -31,6 +31,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..operators import route
+
 try:
     import requests
 except ImportError:  # pragma: no cover
@@ -130,7 +132,7 @@ def records_to_df(
     for page in pages:
         for rec in page:
             rows.append(tuple(coerce(rec.get(f.name), f.dataType) for f in fields))
-    df = spark.createDataFrame(rows, schema)
+    df = route.driver_frame(spark, rows, schema)
     return df.repartition(partitions) if partitions else df
 
 

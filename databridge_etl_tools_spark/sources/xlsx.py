@@ -22,6 +22,8 @@ from xml.etree import ElementTree as ET
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..operators import route
+
 _MAIN = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _RELS = "{http://schemas.openxmlformats.org/package/2006/relationships}"
 _ODOC = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
@@ -151,7 +153,7 @@ def xlsx_to_df(spark: SparkSession, path: str, sheet: str | int = 0) -> DataFram
         )
         for row in data
     ]
-    return spark.createDataFrame(norm, schema)
+    return route.driver_frame(spark, norm, schema)
 
 
 def csv_passthrough(spark: SparkSession, path: str) -> DataFrame:

@@ -66,6 +66,36 @@ def test_derived_partition_count_scales_with_input(spark):
     assert {r["k"]: r["run"] for r in out.collect()} == twin
 
 
+def test_derived_partition_count_runs_no_job(spark):
+    """Under AQE ``df.rdd.getNumPartitions()`` runs the input's shuffle
+    stages; the count is read from the unexecuted plan instead, and it
+    is never below what those stages settle on."""
+    sc = spark.sparkContext
+    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    grouped = spark.range(100000).groupBy((F.col("id") % 1000).alias("k")).count()
+    union = spark.range(100).repartition(3).union(
+        spark.range(5).repartition(shuffle_parts + 6)
+    )
+    # exact where the count is explicit; a grouped input's count is its
+    # shuffle's planned count, which AQE may coalesce below
+    cases = [
+        (grouped, None),
+        (spark.range(100).repartition(shuffle_parts + 17), shuffle_parts + 17),
+        (union, shuffle_parts + 9),
+        (grouped.join(F.broadcast(spark.range(10).withColumnRenamed("id", "k")), "k"), None),
+    ]
+    for i, (df, want) in enumerate(cases):
+        group = f"derived-range-partitions-{i}"
+        sc.setJobGroup(group, "zero-job guard")
+        try:
+            got = derived_range_partitions(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], i
+        assert got >= max(df.rdd.getNumPartitions(), shuffle_parts), i
+        assert want is None or got == want, i
+
+
 def test_internal_name_collisions_are_avoided(spark):
     # r7 advisor: caller columns named like the working columns must
     # survive — internal names shift to suffixed variants

@@ -2,9 +2,14 @@
 reason the helper owns, the budget boundary of each route, and a
 forced ``spark.driver.maxResultSize`` abort on each route."""
 
+import datetime
+import decimal
+import pathlib
+
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from databridge_etl_tools_spark.operators import route
 
@@ -237,3 +242,112 @@ def test_forced_abort_matches_distributed(spark, monkeypatch, case):
     monkeypatch.setattr(route, "collect_bounded", abort)
     assert run() == dist
     assert aborted
+
+
+# -- the way back in: driver_frame -------------------------------------
+
+_T0 = datetime.datetime(2024, 3, 10, 2, 30, 15, 123456)
+
+PARITY = {
+    "int": ([(1,), (-(2**31),), (2**31 - 1,), (None,)], "x int"),
+    "bigint": ([(2**62,), (-(2**63),), (None,)], "x bigint"),
+    "double": ([(1.5,), (float("nan"),), (-0.0,), (None,)], "x double"),
+    "string": ([("a",), ("",), ("é漢",), (None,)], "x string"),
+    "boolean": ([(True,), (False,), (None,)], "x boolean"),
+    "date": ([(datetime.date(1969, 12, 31),), (datetime.date(2024, 2, 29),), (None,)], "x date"),
+    "timestamp": (
+        [
+            (_T0,),
+            (_T0.replace(tzinfo=datetime.timezone(datetime.timedelta(hours=5))),),
+            (datetime.datetime(1960, 1, 1),),
+            (None,),
+        ],
+        "x timestamp",
+    ),
+    "timestamp_ntz": ([(_T0,), (None,)], "x timestamp_ntz"),
+    "decimal": (
+        [(decimal.Decimal("1.005"),), (decimal.Decimal("-12345678.994"),), (None,)],
+        "x decimal(10,2)",
+    ),
+    "binary": ([(b"\x00\xff",), (bytearray(b"ab"),), (None,)], "x binary"),
+    "array<string>": ([(["a", None],), ([],), (None,)], "x array<string>"),
+    "array<long>": ([([1, 2**40],), ([None],), (None,)], "x array<long>"),
+    "mixed": (
+        [("a", 1, 2.0, [3], datetime.date(2020, 1, 1)), (None, None, None, None, None)],
+        "s string, i int, d double, l array<long>, t date",
+    ),
+    "0 rows": ([], "a int, b string, c array<bigint>, d timestamp"),
+    "1 row": ([(7, "x")], "a int, b string"),
+    "struct schema": (
+        [{"k": 1, "v": "a"}, {"k": 2, "v": None}],
+        T.StructType(
+            [T.StructField("k", T.LongType(), False), T.StructField("v", T.StringType())]
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(PARITY))
+def test_driver_frame_parity_with_list_path(spark, case):
+    rows, schema = PARITY[case]
+    want = spark.createDataFrame(rows, schema)
+    got = route.driver_frame(spark, rows, schema)
+    assert got.schema == want.schema
+    # repr: NaN equals itself and -0.0 differs from 0.0
+    assert [repr(tuple(r)) for r in got.collect()] == [repr(tuple(r)) for r in want.collect()]
+
+
+def test_driver_frame_keeps_every_row_and_the_list_path_order(spark):
+    """Row counts around ``defaultParallelism`` leave empty slices,
+    which must not reach the JVM (a zero-row batch ends its read)."""
+    p = spark.sparkContext.defaultParallelism
+    for n in (0, 1, p - 1, p, p + 1, 3 * p + 2):
+        df = route.driver_frame(spark, [(i, [i]) for i in range(n)], "i long, l array<long>")
+        assert [tuple(r) for r in df.collect()] == [(i, [i]) for i in range(n)], n
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([("1",)], "x int"),
+        ([(1,)], "x double"),
+        ([(2**31,)], "x int"),
+        ([(1, 2)], "x int"),
+        ([(None,)], T.StructType([T.StructField("x", T.IntegerType(), False)])),
+        ([([1, None],)], T.StructType([T.StructField("x", T.ArrayType(T.LongType(), False))])),
+    ],
+)
+def test_driver_frame_rejects_what_the_list_path_rejects(spark, rows, schema):
+    with pytest.raises((TypeError, ValueError)):
+        spark.createDataFrame(rows, schema)
+    with pytest.raises((TypeError, ValueError)):
+        route.driver_frame(spark, rows, schema)
+
+
+def test_driver_frame_runs_no_python_rdd(spark):
+    def lineage(df):
+        return df._jdf.queryExecution().toRdd().toDebugString()
+
+    rows, schema = [(i, str(i)) for i in range(50)], "a long, b string"
+    assert "PythonRDD" in lineage(spark.createDataFrame(rows, schema))
+    assert "PythonRDD" not in lineage(route.driver_frame(spark, rows, schema))
+
+
+def test_create_dataframe_only_inside_driver_frame():
+    """Driver-side rows enter Spark only through ``route.driver_frame``;
+    the two pandas frames cross through Arrow already."""
+    pkg = pathlib.Path(route.__file__).resolve().parents[1]
+    found = sorted(
+        (str(p.relative_to(pkg)), line.strip())
+        for p in pkg.rglob("*.py")
+        for line in p.read_text().splitlines()
+        if "createDataFrame(" in line and not line.lstrip().startswith(("#", '"""'))
+    )
+    assert found == [
+        ("operators/graph.py", "return spark.createDataFrame(pdf, schema)"),
+        (
+            "operators/route.py",
+            "return spark.createDataFrame(pa.Table.from_batches(slices or [batch]), schema)",
+        ),
+        ("operators/similarity.py", "return cents, emb.sparkSession.createDataFrame(pdf, schema)"),
+    ]

@@ -106,6 +106,79 @@ def test_promote_to_multi(spark, wkt, target, expect):
     assert one(spark, wkt, lambda c: promote_to_multi(c, target)) == expect
 
 
+# ---------- ASCII case folding of WKT keywords ----------
+
+#: mixed case, EWKT, EMPTY in any case, Z/M suffixes, non-ASCII bodies
+#: and kinds (dotless ı and long ſ upper-case into I and S; ß into SS)
+FOLD_INPUTS = [
+    "SRID=2272;polygon((0 0,1 0,1 1,0 0))",
+    "Polygon Empty",
+    "SRID=4326;point eMpTy",
+    "POINT Z (1 2 3)",
+    "linestring m (0 0 1, 1 1 2)",
+    "MultiPolygon(((0 0,1 0,1 1,0 0)))",
+    "POLYGON ℮mpty",
+    "POINT ÉMPTY",
+    "pοint(1 2)",
+    "poınt(1 2)",
+    "LINESTRING ſtraße",
+    "point(1 2) émpty",
+    "  point  (1 2)  ",
+    "",
+    None,
+]
+
+
+def _old_geometry_kind(c):
+    tail = F.regexp_replace(c, r"^SRID=\d+;", "")
+    return F.upper(F.regexp_extract(tail, r"^\s*([A-Za-z]+)", 1))
+
+
+def _old_promote_to_multi(c, target_kind):
+    from databridge_etl_tools_spark.functions.geometry import MULTI_PROMOTION
+
+    prefix = F.coalesce(F.regexp_extract(c, r"^(SRID=\d+;)", 1), F.lit(""))
+    tail = F.regexp_replace(c, r"^SRID=\d+;", "")
+    kind = F.upper(F.regexp_extract(tail, r"^\s*([A-Za-z]+)", 1))
+
+    def wrapped(single, multi):
+        body = F.trim(F.regexp_replace(tail, r"(?i)^\s*" + single, ""))
+        return F.when(
+            F.upper(F.trim(body)) == "EMPTY", F.concat(F.lit(multi), F.lit(" EMPTY"))
+        ).otherwise(F.concat(F.lit(multi), F.lit("("), F.trim(body), F.lit(")")))
+
+    out = tail
+    for single, multi in MULTI_PROMOTION.items():
+        cond = kind == single
+        if target_kind is not None:
+            cond = cond & (F.upper(F.lit(target_kind).cast("string")) == multi)
+        out = F.when(cond, wrapped(single, multi)).otherwise(out)
+    return F.concat(prefix, out)
+
+
+def test_ascii_folding_equals_upper(spark):
+    """``translate``-based folding gives what ``F.upper`` gave for
+    every WKT function and the V6 well-formedness test."""
+    from databridge_etl_tools_spark.functions.geometry import ascii_upper
+
+    df = spark.createDataFrame([(v,) for v in FOLD_INPUTS], "x string")
+    c = F.col("x")
+    pairs = [
+        (geometry_kind(c), _old_geometry_kind(c)),
+        (ascii_upper(F.trim(c)).endswith("EMPTY"), F.upper(F.trim(c)).endswith("EMPTY")),
+        (promote_to_multi(c), _old_promote_to_multi(c, None)),
+    ]
+    for target in ("MULTIPOLYGON", "multilinestring", "MultiPoint", "POLYGON"):
+        pairs.append((promote_to_multi(c, target), _old_promote_to_multi(c, target)))
+    rows = df.select(
+        *[new.alias(f"n{i}") for i, (new, _) in enumerate(pairs)],
+        *[old.alias(f"o{i}") for i, (_, old) in enumerate(pairs)],
+    ).collect()
+    for r in rows:
+        for i in range(len(pairs)):
+            assert r[f"n{i}"] == r[f"o{i}"], (r, i)
+
+
 # ---------- F17 point → lon/lat ----------
 
 def test_point_to_lon_lat(spark):
